@@ -211,6 +211,13 @@ def minhash_banded_np(
     import pandas as pd
     from pyspark.sql import types as T
 
+    # checked here: a bad split would only surface inside a Python worker,
+    # where the (docs × bands × r) reshape fails
+    if bands <= 0 or num_hashes % bands:
+        raise ValueError(
+            f"minhash_banded_np: bands={bands} must be positive and divide "
+            f"num_hashes={num_hashes}"
+        )
     r = num_hashes // bands
     rng = np.random.RandomState(seed)
     A = rng.randint(1, 2**63 - 1, size=num_hashes, dtype=np.uint64) | np.uint64(1)

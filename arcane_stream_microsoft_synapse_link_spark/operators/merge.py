@@ -40,7 +40,7 @@ inserted rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .dedup import latest_by_version
@@ -90,13 +90,29 @@ def cdc_merge(
     is_delete_col: str = "IsDelete",
     dedup_staged: bool = True,
     allow_schema_evolution: bool = True,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Merge a staged change batch into the target; returns the new target.
 
     ``allow_schema_evolution=False`` is the reference's
     ``staging.table.isUnifiedSchema: true`` (crd-microsoft-synapse.yaml:82-85):
     schema migration between stage and target is disabled, so a column-set
-    mismatch is an error instead of an auto-ADD/null-fill."""
+    mismatch is an error instead of an auto-ADD/null-fill.
+
+    ``observation``: filled, when the returned plan first runs, with
+    ``rows`` — the staged rows as read — and the rows that took effect:
+    ``inserts``, ``updates`` and ``deletes`` (of a key the target held)
+    after dedup and the version guard.  It rides on that plan
+    (``DataFrame.observe``), so it starts no Spark job.  Without version
+    columns every staged row takes effect (last write wins) and counts as
+    an update when the target is not empty."""
+    if observation is not None:
+        # the observation sees one row per key; each carries its key's
+        # raw row count so ``rows`` still counts the batch as read.  The
+        # window shares the dedup's key partitioning: no extra shuffle.
+        per_key = dedup_staged and _version_expr(staged, version_col) is not None
+        n = F.count(F.lit(1)).over(Window.partitionBy(key)) if per_key else F.lit(1)
+        staged = staged.withColumn("__n", n)
     if dedup_staged:
         staged = latest_by_version(staged, key=key, version_col=version_col)
 
@@ -106,8 +122,24 @@ def cdc_merge(
         else F.lit(False)
     )
 
+    def observed(df: DataFrame, hit: Column, takes_effect: Column) -> DataFrame:
+        # observed BEFORE the guard filter, on the branch that feeds the
+        # union: AQE drops plan branches it proves empty (the broadcast
+        # of touched keys, say), and an observation that lived only there
+        # would come back empty
+        if observation is None:
+            return df
+        upsert = takes_effect & ~is_delete
+        return df.observe(
+            observation,
+            F.coalesce(F.sum("__n"), F.lit(0)).alias("rows"),
+            F.count(F.when(upsert & ~hit, 1)).alias("inserts"),
+            F.count(F.when(upsert & hit, 1)).alias("updates"),
+            F.count(F.when(takes_effect & is_delete & hit, 1)).alias("deletes"),
+        ).drop("__n")
+
     if target is None:
-        return staged.where(~is_delete)
+        return observed(staged, F.lit(False), F.lit(True)).where(~is_delete)
 
     if not allow_schema_evolution:
         t_names = {f.name for f in target.schema.fields if not f.name.startswith("__")}
@@ -119,17 +151,25 @@ def cdc_merge(
                 f"target-only: {sorted(t_names - s_names)})"
             )
     target, staged = _evolve(target, staged)
+    if observation is not None:
+        target = target.drop("__n")  # _evolve null-filled it: staged-only
 
     s_ver = _version_expr(staged, version_col)
     t_ver = _version_expr(target, version_col)
     if s_ver is not None and t_ver is not None:
-        tgt_versions = target.select(F.col(key).alias("__k"), t_ver.alias("__tgt_v"))
-        guarded = staged.join(
-            tgt_versions, staged[key] == tgt_versions["__k"], "left"
-        ).where(F.col("__tgt_v").isNull() | (s_ver > F.col("__tgt_v")))
-        effective = guarded.drop("__k", "__tgt_v")
+        tgt_versions = target.select(
+            F.col(key).alias("__k"), t_ver.alias("__tgt_v"), F.lit(True).alias("__hit")
+        )
+        newer = F.col("__tgt_v").isNull() | (s_ver > F.col("__tgt_v"))
+        joined = staged.join(tgt_versions, staged[key] == tgt_versions["__k"], "left")
+        effective = (
+            observed(joined, F.col("__hit").isNotNull(), newer)
+            .where(newer)
+            .drop("__k", "__tgt_v", "__hit")
+        )
     else:
-        effective = staged  # no version columns → last-write-wins
+        # no version columns → last-write-wins
+        effective = observed(staged, F.lit(True), F.lit(True))
 
     upserts = effective.where(~is_delete)
     touched_keys = effective.select(key)

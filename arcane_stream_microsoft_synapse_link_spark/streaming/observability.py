@@ -24,11 +24,17 @@ from dataclasses import asdict, dataclass, field
 @dataclass
 class BatchMetric:
     batch_folder: str
-    rows: int
+    rows: int  # staged rows as read
     seconds: float
     rows_per_sec: float
     wall_ts: float
     tags: dict[str, str] = field(default_factory=dict)
+    # rows that took effect (after dedup and the version guard); None when
+    # the caller did not report the merge outcome
+    merged: int | None = None
+    inserts: int | None = None
+    updates: int | None = None
+    deletes: int | None = None
 
 
 class StatsdPublisher:
@@ -110,7 +116,19 @@ class MetricsRecorder:
         self.metrics: list[BatchMetric] = []
         self.statsd = StatsdPublisher(statsd_address, self.tags) if statsd_address else None
 
-    def record(self, batch_folder: str, rows: int, seconds: float) -> BatchMetric:
+    def record(
+        self,
+        batch_folder: str,
+        rows: int,
+        seconds: float,
+        inserts: int | None = None,
+        updates: int | None = None,
+        deletes: int | None = None,
+    ) -> BatchMetric:
+        """One merged batch: ``rows`` read, and — when the merge outcome
+        is known — the ``inserts``, ``updates`` and ``deletes`` that took
+        effect (``rows.merged`` is their sum)."""
+        outcome = (inserts, updates, deletes)
         m = BatchMetric(
             batch_folder=batch_folder,
             rows=rows,
@@ -118,6 +136,10 @@ class MetricsRecorder:
             rows_per_sec=round(rows / seconds, 3) if seconds > 0 else 0.0,
             wall_ts=time.time(),
             tags=self.tags,
+            merged=None if None in outcome else sum(outcome),
+            inserts=inserts,
+            updates=updates,
+            deletes=deletes,
         )
         self.metrics.append(m)
         if self.path:
@@ -127,7 +149,8 @@ class MetricsRecorder:
         if self.statsd is not None:
             # one merged batch → rows-in count, rows-merged count, duration
             self.statsd.count(METRIC_ROWS_INCOMING, rows)
-            self.statsd.count(METRIC_ROWS_MERGED, rows)
+            if m.merged is not None:
+                self.statsd.count(METRIC_ROWS_MERGED, m.merged)
             self.statsd.timing_ms(METRIC_BATCH_DURATION, seconds * 1000.0)
         return m
 

@@ -31,7 +31,7 @@ from ..operators.merge import cdc_merge
 from ..operators.retry import RetryPolicy, with_retry
 from ..operators.transforms import normalize_column_names, select_fields, with_merge_key
 from ..sources.synapse import BatchFolder, SynapseLinkSource
-from ..tables import VersionedTable
+from ..tables import VersionedTable, type_changes
 from .observability import MetricsRecorder
 
 
@@ -272,46 +272,72 @@ class StreamRunner:
     def _merge_folder_batch(
         self, df: DataFrame, up_to_folder: str, is_backfill: bool = False
     ) -> None:
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        from ..session import release_checkpoint
+
         t0 = time.time()
+        metrics_on = bool(self.spec.metrics_path or self.spec.statsd_address)
+        pinned: list[DataFrame] = []
+        observed: list[Observation] = []
 
         def merge_and_commit() -> None:
-            # the retried unit is merge+commit — safe to replay because the
-            # version-guarded merge is idempotent (re-merge is a no-op)
-            from pyspark.sql import functions as F
-
-            staged = self._prepare(df)
-            if self.table.bucket_count and self.table.exists():
-                # incremental path: merge into ONLY the buckets the batch
-                # touches (partition-pruned target read); untouched buckets
-                # are hard-linked forward by commit — at 100 TB the merge
-                # cost follows the change set, not the table
-                staged = staged.withColumn("__bucket", self.table.bucket_expr())
-                touched = [r[0] for r in staged.select("__bucket").distinct().collect()]
-                target = self._target().where(F.col("__bucket").isin(touched))
-                merged = cdc_merge(
-                    target,
-                    staged,
-                    version_col=self.spec.version_column,
-                    is_delete_col=self.spec.is_delete_column,
-                    allow_schema_evolution=not self.spec.is_unified_schema,
-                )
-                self.table.commit(merged, touched_buckets=touched)
-            else:
-                merged = cdc_merge(
-                    self._target(),
-                    staged,
-                    version_col=self.spec.version_column,
-                    is_delete_col=self.spec.is_delete_column,
-                    allow_schema_evolution=not self.spec.is_unified_schema,
-                )
+            # the retried unit is parse+merge+commit — safe to replay because
+            # the version-guarded merge is idempotent (re-merge is a no-op)
+            if not pinned:
+                # the change folder is parsed once per tick, in this pin's
+                # own job: the touched-bucket list, both merge branches and
+                # the metrics all read it
+                pinned.append(self._prepare(df).localCheckpoint())
+            staged = pinned[0]
+            # metrics ride on the commit's own plan; an Observation fills
+            # once, so each attempt gets a fresh one
+            observed[:] = [Observation()] if metrics_on else []
+            src, target = staged, self._target()
+            touched = None  # None: rewrite the whole table
+            if self.table.bucket_count:
+                src = src.withColumn("__bucket", self.table.bucket_expr())
+                # a column type change rewrites every bucket: hard-linked
+                # ones would keep the old type
+                if target is not None and not type_changes(target.schema, staged.schema):
+                    # incremental path: merge into ONLY the buckets the
+                    # batch touches (partition-pruned target read);
+                    # untouched buckets are hard-linked forward by commit —
+                    # at 100 TB the merge cost follows the change set, not
+                    # the table
+                    touched = [r[0] for r in src.select("__bucket").distinct().collect()]
+                    target = target.where(F.col("__bucket").isin(touched))
+            merged = cdc_merge(
+                target,
+                src,
+                version_col=self.spec.version_column,
+                is_delete_col=self.spec.is_delete_column,
+                allow_schema_evolution=not self.spec.is_unified_schema,
+                observation=observed[0] if observed else None,
+            )
+            if touched is None:
                 self.table.commit(merged)
+            else:
+                self.table.commit(merged, touched_buckets=touched)
 
-        with_retry(merge_and_commit, self.spec.retry, is_backfill=is_backfill)
-        self.table.set_watermark(up_to_folder)  # commit THEN watermark
-        self.stats.batches_merged += 1
-        if self.spec.metrics_path or self.spec.statsd_address:
-            # opt-in: rows count is an extra action, only paid when metrics on
-            self.metrics.record(up_to_folder, df.count(), time.time() - t0)
+        try:
+            with_retry(merge_and_commit, self.spec.retry, is_backfill=is_backfill)
+            self.table.set_watermark(up_to_folder)  # commit THEN watermark
+            self.stats.batches_merged += 1
+            if metrics_on:
+                effect = observed[0].get
+                self.metrics.record(
+                    up_to_folder,
+                    effect["rows"],
+                    time.time() - t0,
+                    inserts=effect["inserts"],
+                    updates=effect["updates"],
+                    deletes=effect["deletes"],
+                )
+        finally:
+            for pin in pinned:
+                release_checkpoint(pin)
         self._maintenance()
 
     # ---- backfill (B13-B17) ------------------------------------------------

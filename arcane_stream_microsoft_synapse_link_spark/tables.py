@@ -5,15 +5,26 @@ The reference lands data in Iceberg and mutates it via Trino ``MERGE``
 implements the same transactional contract on plain parquet:
 
     <root>/
-      _meta/LATEST          # text: committed version number (atomic swap)
-      _meta/watermark       # text: last merged batch folder (operator B11)
-      v0000001/*.parquet    # immutable snapshot per commit
+      _meta/LATEST              # text: committed version number (atomic swap)
+      _meta/watermark           # text: last merged batch folder (operator B11)
+      v0000001/*.parquet        # immutable snapshot per commit
+      v0000001/_manifest.json   # format name + version + the snapshot's schema
 
-A commit writes a brand-new snapshot directory, then atomically replaces
-the pointer file (POSIX rename). Readers resolve the pointer once and only
-ever see complete snapshots — the same reader isolation Iceberg gives via
-its metadata pointer. Old snapshots remain for time travel until
-``expire_snapshots`` (maintenance operator C2/C3) removes them.
+A commit writes a brand-new snapshot directory and its manifest, then
+atomically replaces the pointer file (POSIX rename). Readers resolve the
+pointer once and only ever see complete snapshots — the same reader
+isolation Iceberg gives via its metadata pointer. Old snapshots remain for
+time travel until ``expire_snapshots`` (maintenance operator C2/C3)
+removes them.
+
+The manifest is ``_``-prefixed, so Spark's file listing and the
+:meth:`VersionedTable.changes` inode walk skip it. Readers scan with its
+schema instead of merging parquet footers, which would cost a Spark job
+per read; hard-linked buckets written on an older column set read the
+missing columns as null. A snapshot without a manifest (written before
+manifests existed) is read with ``mergeSchema``; a manifest of another
+format or a newer format version is refused with
+:class:`SnapshotFormatError`.
 
 On a production cluster this module is swapped for Iceberg/Delta
 (``MERGE INTO`` with the identical plan shape); every caller goes through
@@ -26,16 +37,27 @@ would rewrite — mirrored here by partitioning snapshots on a key bucket.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+SNAPSHOT_FORMAT = "arcane-versioned-table"
+SNAPSHOT_FORMAT_VERSION = 1
+MANIFEST = "_manifest.json"
 
 
 class CommitConflictError(RuntimeError):
     """Another writer claimed the next snapshot version (optimistic
     concurrency, Iceberg-style): re-read the table and retry the commit."""
+
+
+class SnapshotFormatError(RuntimeError):
+    """A snapshot's manifest names a format (or format version) this code
+    cannot read."""
 
 
 class VersionedTable:
@@ -128,12 +150,42 @@ class VersionedTable:
                 f"table {self.root} has no committed snapshot v{v} (expired, in-flight, "
                 f"or never committed; available: {self.snapshots()})"
             )
-        # mergeSchema: incremental commits may leave older (hard-linked)
-        # bucket files on the pre-evolution schema; the union schema is the
-        # table schema (missing columns read null)
-        df = spark.read.option("mergeSchema", "true").parquet(self._snapshot_dir(v))
+        df = self._scan(spark, v, [self._snapshot_dir(v)])
         # __p_* transform columns are derived layout, recomputed per commit
         return df.drop(*[c for c in df.columns if c.startswith("__p_")])
+
+    def _manifest_path(self, version: int) -> str:
+        return os.path.join(self._snapshot_dir(version), MANIFEST)
+
+    def _manifest_schema(self, version: int) -> StructType | None:
+        """The schema recorded in snapshot ``version``'s manifest (data
+        columns, then the ``__bucket``/``__p_*`` layout columns), or None
+        for a snapshot written before manifests existed."""
+        path = self._manifest_path(version)
+        try:
+            with open(path) as fh:
+                manifest = json.load(fh)
+        except FileNotFoundError:
+            return None
+        fmt, ver = manifest.get("format"), manifest.get("format_version")
+        if fmt != SNAPSHOT_FORMAT or ver != SNAPSHOT_FORMAT_VERSION:
+            raise SnapshotFormatError(
+                f"snapshot v{version} of {self.root} has format {fmt!r} version "
+                f"{ver!r} ({path}); this code reads {SNAPSHOT_FORMAT!r} version "
+                f"{SNAPSHOT_FORMAT_VERSION}"
+            )
+        return StructType.fromJson(manifest["schema"])
+
+    def _scan(self, spark: SparkSession, version: int, paths: list[str]) -> DataFrame:
+        """Read ``paths`` of snapshot ``version`` with its manifest schema.
+        Snapshots without a manifest fall back to ``mergeSchema``:
+        incremental commits may leave older (hard-linked) bucket files on
+        the pre-evolution schema, and the union schema is the table schema
+        (missing columns read null)."""
+        schema = self._manifest_schema(version)
+        if schema is None:
+            return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return spark.read.schema(schema).parquet(*paths)
 
     def snapshots(self) -> list[int]:
         """Versions currently readable: committed (at or below the pointer
@@ -184,15 +236,16 @@ class VersionedTable:
         same economy Iceberg gets from manifest diffing.  A key's bucket
         is a pure function of the key, so a changed key is always inside
         a rewritten (non-linked) bucket.  Flat (unbucketed) tables fall
-        back to the full-table join.
+        back to the full-table join.  Both sides read with their snapshot
+        manifest's schema (no footer-merge job), and rows are classified
+        on per-side presence flags, so a reader that only counts
+        ``_change_type`` scans just the key and version columns.
         """
         key_col = key_col or self.bucket_key
         head = self.current_version()
         to_v = head if to_version is None else to_version
         if from_version >= to_v:
             raise ValueError(f"from_version {from_version} must be < to_version {to_v}")
-
-        old_dir, new_dir = self._snapshot_dir(from_version), self._snapshot_dir(to_v)
 
         def inodes(d: str) -> dict[str, int]:
             out = {}
@@ -204,11 +257,13 @@ class VersionedTable:
                     out[os.path.relpath(p, d)] = os.stat(p).st_ino
             return out
 
-        oi, ni = inodes(old_dir), inodes(new_dir)
+        oi = inodes(self._snapshot_dir(from_version))
+        ni = inodes(self._snapshot_dir(to_v))
         changed = {rel for rel in set(oi) | set(ni) if oi.get(rel) != ni.get(rel)}
         tops = {rel.split(os.sep, 1)[0] if os.sep in rel else "" for rel in changed}
 
-        def side(base: str, names: dict[str, int]) -> DataFrame | None:
+        def side(version: int, names: dict[str, int]) -> DataFrame | None:
+            base = self._snapshot_dir(version)
             if "" in tops or not tops:
                 dirs = [base] if names else []
             else:
@@ -219,14 +274,14 @@ class VersionedTable:
                 ]
             if not dirs:
                 return None
-            df = spark.read.option("mergeSchema", "true").parquet(*dirs)
+            df = self._scan(spark, version, dirs)
             # __p_* / __bucket are derived layout, not table columns (a
             # pruned read of bucket subdirs never surfaces them anyway)
             return df.drop(
                 *[c for c in df.columns if c.startswith("__p_") or c == "__bucket"]
             )
 
-        old_df, new_df = side(old_dir, oi), side(new_dir, ni)
+        old_df, new_df = side(from_version, oi), side(to_v, ni)
         meta = [F.lit(from_version).alias("_from_version"), F.lit(to_v).alias("_to_version")]
         if new_df is None and old_df is None:
             empty = self.read(spark, to_v).limit(0)
@@ -248,36 +303,45 @@ class VersionedTable:
         dtypes = {f.name: f.dataType for f in base_old.schema.fields}
         dtypes.update({f.name: f.dataType for f in base_new.schema.fields})
 
-        def prep(df: DataFrame, fp_name: str, row_name: str) -> DataFrame:
+        def prep(df: DataFrame, side: str) -> DataFrame:
+            # flat columns plus a presence flag per side (``_o``/``_n``):
+            # the full outer join leaves the flag null on the side a key is
+            # missing from, so classification never touches the row values
+            # and a reader of ``_change_type`` alone scans only the key and
+            # fingerprint columns
             fp = (
                 F.col(version_col)
                 if version_col
                 else F.xxhash64(*[F.col(c) for c in common])
             )
-            row = F.struct(
-                *[
-                    (
-                        F.col(c) if c in df.columns else F.lit(None).cast(dtypes[c])
-                    ).alias(c)
-                    for c in union_cols
-                ]
+            vals = [
+                (F.col(c) if c in df.columns else F.lit(None).cast(dtypes[c])).alias(
+                    f"_{side}{i}"
+                )
+                for i, c in enumerate(union_cols)
+            ]
+            return df.select(
+                F.col(key_col).alias("_k"),
+                fp.alias(f"_{side}fp"),
+                F.lit(True).alias(f"_{side}"),
+                *vals,
             )
-            return df.select(F.col(key_col).alias("_k"), fp.alias(fp_name), row.alias(row_name))
 
-        o = prep(base_old, "_ofp", "_old")
-        n = prep(base_new, "_nfp", "_new")
-        j = o.join(n, "_k", "full_outer")
+        j = prep(base_old, "o").join(prep(base_new, "n"), "_k", "full_outer")
         ctype = (
-            F.when(F.col("_old").isNull(), F.lit("insert"))
-            .when(F.col("_new").isNull(), F.lit("delete"))
+            F.when(F.col("_o").isNull(), F.lit("insert"))
+            .when(F.col("_n").isNull(), F.lit("delete"))
             .when(F.col("_ofp") != F.col("_nfp"), F.lit("update"))
         )
-        row = F.when(F.col("_new").isNotNull(), F.col("_new")).otherwise(F.col("_old"))
+        # insert/update rows carry the new side's values, deletes the old
+        row = [
+            F.when(F.col("_n"), F.col(f"_n{i}")).otherwise(F.col(f"_o{i}")).alias(c)
+            for i, c in enumerate(union_cols)
+        ]
         return (
             j.withColumn("_change_type", ctype)
             .filter(F.col("_change_type").isNotNull())
-            .select(F.col("_change_type"), *meta, row.alias("_row"))
-            .select("_change_type", "_from_version", "_to_version", "_row.*")
+            .select("_change_type", *meta, *row)
         )
 
     def bucket_expr(self):
@@ -311,11 +375,25 @@ class VersionedTable:
         version via exclusive file create BEFORE the expensive snapshot
         write; a second writer racing on the same base version gets
         :class:`CommitConflictError` immediately and must re-read + retry.
-        Claims left by crashed writers expire after ``claim_ttl_s``."""
+        Claims left by crashed writers expire after ``claim_ttl_s``.
+
+        An incremental commit cannot change a column's type: the linked
+        buckets keep the old physical type, and no schema reads both. It
+        raises ``ValueError`` before anything is written; commit the whole
+        table (``touched_buckets=None``) instead."""
         new_v = self.current_version() + 1
+        bucketed = self.bucket_count and self.bucket_key in df.columns
+        linking = bool(bucketed and touched_buckets is not None and new_v > 1)
+        prev_schema = self._schema_of(df.sparkSession, new_v - 1) if linking else None
+        widened = type_changes(prev_schema, df.schema) if linking else []
+        if widened:
+            raise ValueError(
+                f"incremental commit to {self.root} changes column types "
+                f"({', '.join(widened)}); untouched buckets would keep the old "
+                "type — commit the whole table (touched_buckets=None)"
+            )
         self._claim_version(new_v)
         out = self._snapshot_dir(new_v)
-        bucketed = self.bucket_count and self.bucket_key in df.columns
         if bucketed and "__bucket" not in df.columns:
             df = df.withColumn("__bucket", self.bucket_expr())
         # time/identity transform partition levels (bucket stays outermost so
@@ -347,14 +425,53 @@ class VersionedTable:
             w = w.partitionBy(*part_cols)
         w.parquet(out)
 
-        if bucketed and touched_buckets is not None and new_v > 1:
+        if linking:
             prev = self._snapshot_dir(new_v - 1)
             keep = {f"__bucket={int(b)}" for b in touched_buckets}
             for name in os.listdir(prev):
                 if name.startswith("__bucket=") and name not in keep:
                     self._link_dir(os.path.join(prev, name), os.path.join(out, name))
+        self._write_manifest(new_v, df.schema, part_cols, prev_schema)
         self._write_atomic(self._pointer_path(), str(new_v))
         return new_v
+
+    def _schema_of(self, spark: SparkSession, version: int) -> StructType:
+        """Snapshot ``version``'s schema: its manifest's, or for a snapshot
+        without one the ``mergeSchema`` read's (one footer-merge job)."""
+        schema = self._manifest_schema(version)
+        if schema is None:
+            schema = self._scan(spark, version, [self._snapshot_dir(version)]).schema
+        return schema
+
+    def _write_manifest(
+        self,
+        version: int,
+        written: StructType,
+        part_cols: list[str],
+        linked: StructType | None,
+    ) -> None:
+        """Record the schema a reader of snapshot ``version`` sees: the
+        written data columns, then any column only the hard-linked buckets
+        (schema ``linked``) still carry, then the partition columns."""
+        data = [f for f in written.fields if f.name not in part_cols]
+        if linked is not None:
+            have = {f.name for f in written.fields}
+            data += [
+                f
+                for f in linked.fields
+                if f.name not in have
+                and f.name != "__bucket"
+                and not f.name.startswith("__p_")
+            ]
+        fields = data + [written[c] for c in part_cols]
+        schema = StructType([StructField(f.name, f.dataType, True) for f in fields])
+        manifest = {
+            "format": SNAPSHOT_FORMAT,
+            "format_version": SNAPSHOT_FORMAT_VERSION,
+            "schema": schema.jsonValue(),
+        }
+        # the staging file is "_"-prefixed too: hidden from Spark's listing
+        self._write_atomic(self._manifest_path(version), json.dumps(manifest))
 
     claim_ttl_s: float = 3600.0
 
@@ -421,8 +538,6 @@ class VersionedTable:
         ``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS``). One
         distributed pass: count/min/max/null-count per column + HLL distinct
         for join-planning selectivity."""
-        import json
-
         df = self.read(spark)
         cols = columns or [f.name for f in df.schema.fields if not f.name.startswith("__")]
         aggs = [F.count(F.lit(1)).alias("__rows")]
@@ -444,8 +559,6 @@ class VersionedTable:
         return stats
 
     def stats(self) -> dict | None:
-        import json
-
         try:
             with open(os.path.join(self._meta, "stats.json")) as fh:
                 return json.loads(fh.read())
@@ -510,8 +623,6 @@ class VersionedTable:
         """Columns of the table's persisted z-order layout (set by
         :meth:`optimize_zorder`, consumed by :meth:`optimize`), or []
         when the table has never been z-clustered."""
-        import json
-
         try:
             with open(os.path.join(self._meta, "layout.json")) as fh:
                 return list(json.loads(fh.read()).get("zorder", []))
@@ -542,8 +653,6 @@ class VersionedTable:
         (``_meta/layout.json``, Iceberg's ``WRITE ORDERED BY`` table
         property analog) so later :meth:`optimize` compactions re-apply
         the same z-sort instead of reverting to ``sorted_by``."""
-        import json
-
         df = self.read(spark)
         self._write_atomic(
             os.path.join(self._meta, "layout.json"),
@@ -637,6 +746,19 @@ class VersionedTable:
                     shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
                     removed.append(v)
         return sorted(removed)
+
+
+def type_changes(old: StructType, new: StructType) -> list[str]:
+    """``"name: old -> new"`` for each column of ``new`` that ``old`` holds
+    with another type (a CDM widening such as bigint -> string).  Types
+    compare by ``simpleString``: the nested nullability a parquet read
+    relaxes is not a type change."""
+    before = {f.name: f.dataType.simpleString() for f in old.fields}
+    return [
+        f"{f.name}: {before[f.name]} -> {f.dataType.simpleString()}"
+        for f in new.fields
+        if f.name in before and before[f.name] != f.dataType.simpleString()
+    ]
 
 
 def zorder_key(df: DataFrame, columns: list[str]) -> F.Column:

@@ -57,6 +57,13 @@ def test_minhash_finds_planted_pairs(planted):
     assert len(false_positives) == 0, false_positives
 
 
+@pytest.mark.parametrize("bands", [0, -4, 5, 256])
+def test_minhash_banded_rejects_bands_not_dividing_num_hashes(spark, bands):
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="must be positive and divide"):
+        D.minhash_banded_np(df, num_hashes=128, bands=bands)
+
+
 def test_simhash_finds_planted_pairs(planted):
     df, pairs = planted
     found = {(r.id_a, r.id_b) for r in D.simhash_near_duplicates(df, max_hamming=10).collect()}

@@ -58,13 +58,14 @@ def test_recorder_emits_one_merged_batch_metrics():
     port = srv.getsockname()[1]
 
     rec = MetricsRecorder(tags={"entity": "orders"}, statsd_address=f"udp:127.0.0.1:{port}")
-    rec.record("2021-06-01T12.00.00Z", rows=250, seconds=0.5)
+    # 250 rows read; 40 took effect — the rest were stale re-uploads
+    rec.record("2021-06-01T12.00.00Z", rows=250, seconds=0.5, inserts=10, updates=25, deletes=5)
 
     lines = sorted(srv.recv(4096).decode() for _ in range(3))
     assert lines == [
         f"{METRIC_BATCH_DURATION}:500|ms|#entity:orders",
         f"{METRIC_ROWS_INCOMING}:250|c|#entity:orders",
-        f"{METRIC_ROWS_MERGED}:250|c|#entity:orders",
+        f"{METRIC_ROWS_MERGED}:40|c|#entity:orders",
     ]
     assert rec.total_rows == 250
     srv.close()

@@ -1,0 +1,165 @@
+"""Plan shape of one change-capture tick: the change CSV is parsed once,
+metrics ride on the commit's own plan (no Spark job of their own) and
+report the rows that took effect, and a bucketed table survives a column
+type change."""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+
+from pyspark.sql import functions as F
+
+from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner, StreamSpec
+
+from .conftest import count_jobs
+from .synapse_fixture import (
+    BASE_VERSION,
+    COLUMNS,
+    ENTITY,
+    KEYS,
+    SynapseFixture,
+    data_row,
+    minus,
+    model_json,
+)
+
+
+def _spec(tmp_path, name, **kw):
+    return StreamSpec(
+        entity_name=ENTITY,
+        source_root=str(tmp_path / "source"),
+        target_root=str(tmp_path / name),
+        **kw,
+    )
+
+
+def _sql_plans_after(spark, last_id):
+    """Physical plan texts of the SQL executions with id > ``last_id``."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > last_id:
+            out.append(e.physicalPlanDescription())
+    return out
+
+
+def _last_sql_id(spark):
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1)
+
+
+def test_run_once_scans_change_csv_once(spark, tmp_path):
+    fx = SynapseFixture(tmp_path / "source")
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    for name, buckets in (("flat", 0), ("bucketed", 8)):
+        runner = StreamRunner(spark, _spec(tmp_path, name, bucket_count=buckets))
+        runner.backfill()
+        folder = fx.upload_batch(
+            minus(minutes=30 - buckets), add_delete=True, add_upsert=True,
+            update_changelog=True,
+        )
+        before = _last_sql_id(spark)
+        assert runner.run_once() == 1
+        scans = [
+            ln
+            for plan in _sql_plans_after(spark, before)
+            for ln in plan.splitlines()
+            if re.match(r"\(\d+\) Scan (text|csv) ", ln)
+        ]
+        assert len(scans) == 1, (name, scans)
+        assert runner.table.watermark() == folder
+
+
+def _state(spark, runner):
+    df = runner.table.read(spark)
+    return {r["Id"]: r["versionnumber"] for r in df.select("Id", "versionnumber").collect()}
+
+
+def test_metrics_add_no_jobs_and_report_rows_that_took_effect(spark, tmp_path):
+    fx = SynapseFixture(tmp_path / "source")
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    runners = {
+        on: StreamRunner(
+            spark,
+            _spec(
+                tmp_path,
+                f"target-{on}",
+                metrics_path=str(tmp_path / "metrics.jsonl") if on else None,
+            ),
+        )
+        for on in (False, True)
+    }
+    for r in runners.values():
+        r.backfill()
+    # the base file re-uploaded (5 stale rows) plus a delete of KEYS[0],
+    # an update of KEYS[1] and inserts of KEYS[5] and KEYS[6]
+    fx.upload_batch(minus(minutes=5), add_delete=True, add_upsert=True, update_changelog=True)
+    jobs = {}
+    for on, r in runners.items():
+        got, jobs[on] = count_jobs(spark, r.run_once)
+        assert got == 1
+    assert jobs[True] == jobs[False]
+    assert _state(spark, runners[True]) == _state(spark, runners[False])
+
+    with open(tmp_path / "metrics.jsonl") as fh:
+        (rec,) = [json.loads(x) for x in fh]
+    assert rec["rows"] == 5 + 1 + 3
+    assert (rec["inserts"], rec["updates"], rec["deletes"]) == (2, 1, 1)
+    assert rec["merged"] == 4
+
+
+def _widened_batch(fx, ts, rows):
+    """A batch folder whose model.json types ``ordinal`` as string."""
+    name = fx.folder_name(ts)
+    entity_dir = os.path.join(fx.root, name, ENTITY)
+    os.makedirs(entity_dir)
+    with open(os.path.join(fx.root, name, "model.json"), "w") as fh:
+        fh.write(
+            model_json().replace('"name": "ordinal", "dataType": "int64"',
+                                 '"name": "ordinal", "dataType": "string"')
+        )
+    with open(os.path.join(entity_dir, "data.csv"), "w") as fh:
+        fh.write("\n".join(rows) + "\n")
+    fx.set_changelog(name)
+    return name
+
+
+def test_bucketed_runner_survives_type_widening(spark, tmp_path):
+    """int64 → string on a bucketed target: the widening tick rewrites every
+    bucket (hard-linked ones would keep int64 files and make the table
+    unreadable), later ticks go back to the incremental path."""
+    assert ("ordinal", "int64") in COLUMNS
+    fx = SynapseFixture(tmp_path / "source")
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    runner = StreamRunner(spark, _spec(tmp_path, "target", bucket_count=4))
+    runner.backfill()
+
+    _widened_batch(fx, minus(minutes=20), [data_row(KEYS[1], BASE_VERSION + 100, "D-WIDE")])
+    assert runner.run_once() == 1
+    df = runner.table.read(spark)
+    assert dict(df.dtypes)["ordinal"] == "string"
+    got = {r["Id"]: (r["ordinal"], r["displayvalue"]) for r in df.collect()}
+    assert len(got) == 5
+    assert got[KEYS[1]] == ("1", "D-WIDE")
+    assert all(o == "1" for o, _ in got.values())  # historical values survive
+    assert not _shared_inodes(runner.table)  # nothing linked across the change
+
+    # same (string) schema again: incremental, and still readable
+    _widened_batch(fx, minus(minutes=10), [data_row(KEYS[2], BASE_VERSION + 100, "D-NEXT")])
+    assert runner.run_once() == 1
+    assert _shared_inodes(runner.table)  # untouched buckets linked
+    df = runner.table.read(spark)
+    assert df.where(F.col("displayvalue") == "D-NEXT").count() == 1
+    assert df.count() == 5
+
+
+def _shared_inodes(t):
+    """Inodes the head snapshot shares with the one before it."""
+    v = t.current_version()
+    return set.intersection(*[
+        {os.stat(os.path.join(r, f)).st_ino for r, _, fs in os.walk(t._snapshot_dir(x)) for f in fs}
+        for x in (v - 1, v)
+    ])
