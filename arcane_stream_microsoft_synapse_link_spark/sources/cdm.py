@@ -137,9 +137,13 @@ def cast_attribute(col: Column, attr: CdmAttribute) -> Column:
     return empty_null.try_cast(attr.spark_type().simpleString())
 
 
-def apply_schema(df: DataFrame, entity: CdmEntity) -> DataFrame:
-    """Cast an all-string CSV DataFrame to the CDM-declared types (B3)."""
-    return df.select(*[cast_attribute(F.col(a.name), a).alias(a.name) for a in entity.attributes])
+def apply_schema(df: DataFrame, entity: CdmEntity, *keep: str) -> DataFrame:
+    """Cast an all-string CSV DataFrame to the CDM-declared types (B3),
+    carrying the ``keep`` columns through untouched.  The one CDM value
+    parser: the batch reads and the readStream path both type here."""
+    return df.select(
+        *[cast_attribute(F.col(a.name), a).alias(a.name) for a in entity.attributes], *keep
+    )
 
 
 _CSV_OPTIONS = {"quote": '"', "escape": '"', "mode": "PERMISSIVE"}
@@ -183,11 +187,18 @@ def paths_are_line_splittable(spark: SparkSession, paths: list[str] | str) -> bo
     return lines.where(quote_cnt % 2 != 0).isEmpty()
 
 
+def _from_csv_lines(spark: SparkSession, paths: list[str] | str, entity: CdmEntity) -> DataFrame:
+    """Byte-range-splittable CSV read: ``from_csv`` over ``spark.read.text``
+    lines.  Only correct when no record spans lines."""
+    lines = spark.read.text(paths).where(F.col("value") != "")
+    parsed = lines.select(
+        F.from_csv("value", _raw_schema_ddl(entity), _CSV_OPTIONS).alias("r")
+    ).select("r.*")
+    return apply_schema(parsed, entity)
+
+
 def _read_line_splittable(
-    spark: SparkSession,
-    paths: list[str] | str,
-    entity: CdmEntity,
-    parity_known: bool = False,
+    spark: SparkSession, paths: list[str] | str, entity: CdmEntity
 ) -> DataFrame | None:
     """Byte-range-splittable CSV read, or None if records span lines.
 
@@ -198,24 +209,18 @@ def _read_line_splittable(
 
     Trade: two fully-parallel passes (parity scan + from_csv parse of
     ``spark.read.text`` lines, both splittable by HDFS/ABFS byte ranges)
-    instead of one scan parallelized only per-file. ``parity_known=True``
-    skips the parity scan (the caller already proved it for these paths).
+    instead of one scan parallelized only per-file.
     """
-    if not parity_known and not paths_are_line_splittable(spark, paths):
+    if not paths_are_line_splittable(spark, paths):
         return None
-    lines = spark.read.text(paths).where(F.col("value") != "")
-    parsed = lines.select(
-        F.from_csv("value", _raw_schema_ddl(entity), _CSV_OPTIONS).alias("r")
-    ).select("r.*")
-    return apply_schema(parsed, entity)
+    return _from_csv_lines(spark, paths, entity)
 
 
 def read_entity_csv(
     spark: SparkSession,
     paths: list[str] | str,
     entity: CdmEntity,
-    line_splittable: bool | str = "auto",
-    parity_known: bool = False,
+    line_splittable: bool | None = None,
 ) -> DataFrame:
     """Read headerless quoted CSV chunks for one entity and type them (A3).
 
@@ -225,22 +230,20 @@ def read_entity_csv(
     spans a line, by the byte-range-splittable text+``from_csv`` fast path
     (see ``_read_line_splittable``).
 
-    ``line_splittable``: "auto" tries the fast path when the file count
-    under-fills the cluster (fewer files than ``defaultParallelism`` —
-    with many files the multiLine read is already file-parallel and the
-    extra parity pass is pure cost); True forces it (falling back only if
-    parity fails); False forces the multiLine read. ``parity_known=True``
-    asserts the caller already ran ``paths_are_line_splittable`` over (a
-    superset of) these paths, so the fast path skips its own parity job.
+    ``line_splittable`` is the caller's ``paths_are_line_splittable``
+    answer over (a superset of) these paths: True takes the fast path,
+    False the multiLine read.  None probes here, and only when the file
+    count under-fills the cluster (fewer files than
+    ``defaultParallelism``) — with many files the multiLine read is
+    already file-parallel and the parity pass is pure cost.
     """
-    n_files = 1 if isinstance(paths, str) else len(paths)
-    want_fast = line_splittable is True or (
-        line_splittable == "auto" and n_files < spark.sparkContext.defaultParallelism
-    )
-    if want_fast:
-        fast = _read_line_splittable(spark, paths, entity, parity_known=parity_known)
-        if fast is not None:
-            return fast
+    if line_splittable is None:
+        n_files = 1 if isinstance(paths, str) else len(paths)
+        line_splittable = n_files < spark.sparkContext.defaultParallelism and (
+            paths_are_line_splittable(spark, paths)
+        )
+    if line_splittable:
+        return _from_csv_lines(spark, paths, entity)
     raw = (
         spark.read.schema(entity.raw_schema())
         .options(header=False, multiLine=True, **_CSV_OPTIONS)

@@ -10,95 +10,50 @@ Spark-4 shape for the reference's ``SynapseLinkStreamingSource``
   batch folders named within ``(start, end]`` — folder names are sortable
   timestamps, so the offset range IS the watermark filter (B5), and data
   reads parallelize per chunk exactly like the reference's per-file reads.
-* ``read(partition)`` = parse the headerless CSV against the folder's own
-  ``model.json`` schema (per-batch schema, watch-list item 3), with the
-  same forgiving multi-format timestamp handling as the JVM batch path
-  (``cdm.parse_timestamp``).
+* ``read(partition)`` = tokenize the headerless CSV against the folder's
+  own ``model.json`` column list (per-batch schema, watch-list item 3).
+
+The source only tokenizes: every column comes out as a raw string
+(unquoted and quoted empty fields are null, as in Spark's CSV reader),
+plus ``_batch_folder``.  Typing is the engine's job, not the source's:
+``streaming.structured.read_stream`` applies ``cdm.cast_attribute`` — the
+casts the batch reader uses — so one JVM projection types both paths.  A
+direct ``readStream.format("synapse_link")`` user gets the raw strings;
+``read_stream`` is the typed entry point.
 
 Offsets live in the streaming checkpoint → exactly-once with an idempotent
-sink merge. The Python parse path is the streaming TAIL (small change
-batches); bulk backfill goes through the vectorized JVM CSV reader
-(``SynapseLinkSource.read_folders``) — same split the reference makes
-between change capture and backfill sharding.
+sink merge.
 """
 
 from __future__ import annotations
 
 import csv
+import io
 import os
 import re
 import sys
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
-from datetime import datetime, timezone
-from decimal import Decimal, InvalidOperation
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructType
 
-from .cdm import CdmAttribute, parse_model
+from .cdm import CdmEntity
 from .synapse import FOLDER_RE, SynapseLinkSource
 
-_US12 = re.compile(r"^(\d{1,2})/(\d{1,2})/(\d{4}) (\d{1,2}):(\d{2}):(\d{2}) (AM|PM)$")
 
-
-def parse_timestamp_py(s: str) -> datetime | None:
-    """Python twin of ``cdm.parse_timestamp`` (same wire formats, same
-    null-on-unparseable semantics). Offset-aware inputs normalize to UTC;
-    zone-less inputs stay naive (session-timezone semantics, matching the
-    JVM ``try_to_timestamp`` behavior)."""
-    s = s.strip()
-    if not s:
-        return None
-    m = _US12.match(s)
-    if m:
-        mo, d, y, h, mi, sec, ap = m.groups()
-        hour = int(h) % 12 + (12 if ap == "PM" else 0)
-        try:
-            return datetime(int(y), int(mo), int(d), hour, int(mi), int(sec))
-        except ValueError:
-            return None
-    try:
-        dt = datetime.fromisoformat(s)  # 3.11+: handles Z, offsets, 7-digit fractions
-    except ValueError:
-        return None
-    if dt.tzinfo is not None:
-        dt = dt.astimezone(timezone.utc)
-    return dt
-
-
-def parse_value_py(raw: str | None, attr: CdmAttribute):
-    """Python twin of ``cdm.cast_attribute``: empty → null, try-cast else null."""
-    if raw is None:
-        return None
-    dt = attr.data_type.lower()
-    if dt in ("guid", "string"):
-        return raw  # never truncate, preserve as-is (incl. empty string)
-    stripped = raw.strip()
-    if stripped == "":
-        return None
-    try:
-        if dt in ("int64", "int32"):
-            return int(stripped)
-        if dt == "decimal":
-            return Decimal(stripped)
-        if dt == "double":
-            return float(stripped)
-        if dt == "boolean":
-            low = stripped.lower()
-            return True if low in ("true", "1") else False if low in ("false", "0") else None
-        if dt in ("datetime", "datetimeoffset"):
-            return parse_timestamp_py(raw)
-    except (ValueError, InvalidOperation):
-        return None
-    return raw
+def stream_schema(entity: CdmEntity) -> StructType:
+    """The source's output schema: the entity's columns as raw strings,
+    then the provenance column — which batch folder (source version) each
+    row came from, so the sink commits a B11 watermark per micro-batch."""
+    return entity.raw_schema().add("_batch_folder", "string", nullable=False)
 
 
 @dataclass(frozen=True)
 class CsvChunkPartition(InputPartition):
     path: str
     folder: str  # batch folder name = source version (provenance + watermark)
-    attributes: tuple[CdmAttribute, ...]
+    columns: tuple[str, ...]  # the folder's model.json column order
     # byte range [offset, offset+length) of PROVEN whole records; length -1
     # = to EOF.  Ranges are planned by _csv_split_points, whose cuts sit
     # right after quote-parity-even newlines — true record boundaries even
@@ -186,26 +141,11 @@ class SynapseLinkStreamReader(DataSourceStreamReader):
         entity: str,
         max_folders_per_trigger: int = 0,
         query_columns: tuple[str, ...] = (),
-        query_types: tuple = (),
-        use_arrow: bool = True,
         chunk_bytes: int = DEFAULT_CHUNK_BYTES,
     ):
         self._source = SynapseLinkSource(root, entity)
         self._max_folders = max_folders_per_trigger
         self._chunk_bytes = max(0, chunk_bytes)
-        # Arrow mode (default): read() yields pyarrow RecordBatches — the
-        # C++ CSV parse + columnar convert, ~vectorized-JVM-class speed —
-        # falling back to row tuples only when pyarrow is unavailable or
-        # arrowBatches=false. The mode is fixed per reader, never mixed
-        # per partition. query_types carries the Spark DataType of each
-        # query column (needed to type null columns and Arrow arrays).
-        self._query_types = query_types
-        try:
-            import pyarrow  # noqa: F401
-
-            self._use_arrow = bool(use_arrow)
-        except ImportError:
-            self._use_arrow = False
         # data columns of the query schema (no _batch_folder): every emitted
         # row is projected onto these — folder-local schemas may lag (null-
         # padded) or lead (extra attrs dropped until a stream restart picks
@@ -247,13 +187,13 @@ class SynapseLinkStreamReader(DataSourceStreamReader):
             csvs = self._source.batch_csvs(folder)  # scheme-agnostic (A5)
             if not csvs:
                 continue
-            attrs = self._source.entity_schema(folder).attributes
+            columns = tuple(a.name for a in self._source.entity_schema(folder).attributes)
             for p in csvs:
-                parts.extend(self._file_partitions(p, folder.name, attrs))
+                parts.extend(self._file_partitions(p, folder.name, columns))
         return parts
 
     def _file_partitions(
-        self, path: str, folder: str, attrs
+        self, path: str, folder: str, columns: tuple[str, ...]
     ) -> list[CsvChunkPartition]:
         """One partition per parity-safe byte range of the file — the
         file-source ``maxPartitionBytes`` discipline for this reader: a
@@ -271,174 +211,68 @@ class SynapseLinkStreamReader(DataSourceStreamReader):
                     CsvChunkPartition(
                         path=path,
                         folder=folder,
-                        attributes=attrs,
+                        columns=columns,
                         offset=lo,
                         length=hi - lo,
                     )
                     for lo, hi in zip(bounds, bounds[1:])
                 ]
-        return [CsvChunkPartition(path=path, folder=folder, attributes=attrs)]
+        return [CsvChunkPartition(path=path, folder=folder, columns=columns)]
 
     @staticmethod
-    def _chunk_text(partition: CsvChunkPartition) -> str:
-        """The partition's byte range decoded — whole records by the
-        planner's parity proof."""
+    def _chunk(partition: CsvChunkPartition) -> bytes:
+        """The partition's byte range — whole records by the planner's
+        parity proof."""
         with open(_local_path(partition.path), "rb") as fh:
             if partition.offset:
                 fh.seek(partition.offset)
-            data = fh.read(partition.length if partition.length >= 0 else -1)
-        return data.decode("utf-8")
+            return fh.read(partition.length if partition.length >= 0 else -1)
 
-    # -- executor-side read (A3) ------------------------------------------
-    def read(self, partition: CsvChunkPartition) -> Iterator:
-        if self._use_arrow:
-            yield from self._read_arrow(partition)
-        else:
-            yield from self._read_tuples(partition)
-
-    def _row_plan(self, attrs) -> list[tuple[int | None, CdmAttribute | None]]:
+    # -- executor-side read (A3): tokenize only ---------------------------
+    def _row_plan(self, names: tuple[str, ...]) -> list[int | None]:
         """Project the folder-local row onto the query schema (B7/B10):
         query column missing in this folder → None; folder attr unknown
         to the query → dropped."""
-        by_name = {a.name: i for i, a in enumerate(attrs)}
-        cols = self._query_columns or tuple(a.name for a in attrs)
-        return [(by_name.get(c), attrs[by_name[c]] if c in by_name else None) for c in cols]
+        by_name = {n: i for i, n in enumerate(names)}
+        return [by_name.get(c) for c in self._query_columns or names]
 
-    def _read_tuples(self, partition: CsvChunkPartition) -> Iterator[tuple]:
-        import io
-
-        attrs = partition.attributes
-        n = len(attrs)
-        plan = self._row_plan(attrs)
-        if partition.offset or partition.length >= 0:
-            fh = io.StringIO(self._chunk_text(partition), newline="")
-        else:
-            fh = open(_local_path(partition.path), newline="")
-        with fh:
-            # quoted, quote-escaped-by-doubling — same dialect as the JVM read
-            for row in csv.reader(fh):
-                padded = (row + [None] * n)[:n]
-                yield tuple(
-                    parse_value_py(padded[i], a) if i is not None else None
-                    for i, a in plan
-                ) + (partition.folder,)
-
-    # -- Arrow fast path: C++ CSV parse + columnar convert ------------------
-    def _out_fields(self, attrs) -> list[tuple[str, object]]:
-        """(name, spark DataType) per output column, _batch_folder last."""
-        from pyspark.sql.types import StringType
-
-        if self._query_columns and len(self._query_types) == len(self._query_columns):
-            fields = list(zip(self._query_columns, self._query_types))
-        else:
-            fields = [(a.name, a.spark_type()) for a in attrs]
-        return fields + [("_batch_folder", StringType())]
-
-    def _rows_to_batch(self, rows: list[tuple], fields, folder: str):
-        """Python-parsed rows → one RecordBatch (the slow-path twin used
-        for malformed/sparse lines so Arrow mode never mixes tuples in)."""
+    def _batch(self, columns: list, names: tuple[str, ...], folder: str):
+        """Folder-local string columns → one RecordBatch on the query
+        schema, ``_batch_folder`` last."""
         import pyarrow as pa
 
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        arrays = []
-        for j, (_, dtype) in enumerate(fields[:-1]):
-            at = to_arrow_type(dtype)
-            vals = [self._utc(r[j]) for r in rows] if pa.types.is_timestamp(at) else [
-                r[j] for r in rows
-            ]
-            arrays.append(pa.array(vals, type=at))
-        arrays.append(pa.array([folder] * len(rows), type=pa.string()))
-        return pa.RecordBatch.from_arrays(arrays, names=[n for n, _ in fields])
-
-    @staticmethod
-    def _utc(d):
-        """Arrow timestamp arrays are tz-aware UTC (Spark's arrow mapping);
-        zone-less wire values mean session-local time and the engine pins
-        the session timezone to UTC (session.py RUNTIME_CONF)."""
-        from datetime import timezone
-
-        if d is not None and d.tzinfo is None:
-            return d.replace(tzinfo=timezone.utc)
-        return d
-
-    def _convert_column(self, arr, attr: CdmAttribute, arrow_type):
-        """All-string column → typed Arrow array with the exact semantics
-        of ``parse_value_py`` (empty → null, try-cast else null)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        dt = attr.data_type.lower()
-        if dt in ("guid", "string"):
-            return arr  # never truncate; "" stays ""
-        trimmed = pc.utf8_trim_whitespace(arr)
-        cleaned = pc.if_else(
-            pc.equal(trimmed, pa.scalar("")), pa.scalar(None, pa.string()), trimmed
+        n = len(columns[0]) if columns else 0
+        arrays = [
+            columns[i] if i is not None else pa.nulls(n, pa.string())
+            for i in self._row_plan(names)
+        ]
+        arrays.append(pa.repeat(folder, n))
+        return pa.RecordBatch.from_arrays(
+            arrays, names=[*(self._query_columns or names), "_batch_folder"]
         )
-        if dt == "boolean":
-            low = pc.utf8_lower(cleaned)
-            is_t = pc.fill_null(pc.is_in(low, value_set=pa.array(["true", "1"])), False)
-            is_f = pc.fill_null(pc.is_in(low, value_set=pa.array(["false", "0"])), False)
-            return pc.if_else(
-                is_t,
-                pa.scalar(True),
-                pc.if_else(is_f, pa.scalar(False), pa.scalar(None, pa.bool_())),
-            )
-        if dt in ("datetime", "datetimeoffset"):
-            vals = [
-                self._utc(parse_timestamp_py(v)) if v is not None else None
-                for v in arr.to_pylist()
-            ]
-            return pa.array(vals, type=arrow_type)
-        try:
-            # int64/int32/double/decimal: vectorized cast; any unparseable
-            # cell in the column falls back to the per-value try-cast twin
-            return pc.cast(cleaned, arrow_type)
-        except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-            vals = [parse_value_py(v, attr) for v in arr.to_pylist()]
-            return pa.array(vals, type=arrow_type)
 
-    def _read_arrow(self, partition: CsvChunkPartition) -> Iterator:
+    def read(self, partition: CsvChunkPartition) -> Iterator:
+        """Raw-string RecordBatches: the C++ CSV parse, and ``csv.reader``
+        for the rows it rejects (ragged sparse-delete rows) or a chunk it
+        cannot parse at all."""
         import pyarrow as pa
         import pyarrow.csv as pacsv
 
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        attrs = partition.attributes
-        n = len(attrs)
-        fields = self._out_fields(attrs)
-        plan = self._row_plan(attrs)
-
-        def rows_from_text(lines: list[str]) -> list[tuple]:
-            out = []
-            for row in csv.reader(lines):
-                padded = (row + [None] * n)[:n]
-                out.append(
-                    tuple(
-                        parse_value_py(padded[i], a) if i is not None else None
-                        for i, a in plan
-                    )
-                )
-            return out
-
+        names = partition.columns
         bad_lines: list[str] = []
 
-        def on_invalid(row):  # ragged row (sparse delete rows): python-parse it
+        def on_invalid(row):
             bad_lines.append(row.text)
             return "skip"
 
         if partition.offset or partition.length >= 0:
-            with open(_local_path(partition.path), "rb") as fh:
-                if partition.offset:
-                    fh.seek(partition.offset)
-                raw = fh.read(partition.length if partition.length >= 0 else -1)
-            source = pa.BufferReader(raw)
+            source = pa.BufferReader(self._chunk(partition))
         else:
             source = _local_path(partition.path)
         try:
             table = pacsv.read_csv(
                 source,
-                read_options=pacsv.ReadOptions(column_names=[a.name for a in attrs]),
+                read_options=pacsv.ReadOptions(column_names=names),
                 parse_options=pacsv.ParseOptions(
                     quote_char='"',
                     double_quote=True,
@@ -446,45 +280,24 @@ class SynapseLinkStreamReader(DataSourceStreamReader):
                     invalid_row_handler=on_invalid,
                 ),
                 convert_options=pacsv.ConvertOptions(
-                    column_types={a.name: pa.string() for a in attrs},
-                    strings_can_be_null=False,
+                    column_types={n: pa.string() for n in names},
+                    null_values=[""],
+                    strings_can_be_null=True,
+                    quoted_strings_can_be_null=True,
                 ),
             )
         except pa.ArrowInvalid:
-            # whole-chunk fallback (still Arrow out — modes never mix)
-            if partition.offset or partition.length >= 0:
-                text = self._chunk_text(partition)
-            else:
-                with open(_local_path(partition.path), newline="") as fh:
-                    text = fh.read()
-            rows = rows_from_text(text.splitlines())
-            if rows:
-                yield self._rows_to_batch(rows, fields, partition.folder)
-            return
-
-        if table.num_rows:
-            table = table.combine_chunks()
-            by_name = {a.name: a for a in attrs}
-            arrays, names = [], []
-            for name, dtype in fields[:-1]:
-                at = to_arrow_type(dtype)
-                attr = by_name.get(name)
-                if attr is None:  # query column this folder doesn't carry
-                    arrays.append(pa.nulls(table.num_rows, type=at))
-                else:
-                    col = table.column(name)
-                    arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
-                    arrays.append(self._convert_column(arr, attr, at))
-                names.append(name)
-            arrays.append(
-                pa.array([partition.folder] * table.num_rows, type=pa.string())
+            table, bad_lines = None, [self._chunk(partition).decode("utf-8", "replace")]
+        if table is not None and table.num_rows:
+            yield self._batch(
+                [c.combine_chunks() for c in table.columns], names, partition.folder
             )
-            names.append("_batch_folder")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-        if bad_lines:
-            rows = rows_from_text(bad_lines)
-            if rows:
-                yield self._rows_to_batch(rows, fields, partition.folder)
+        rows = [r for r in csv.reader(io.StringIO("\n".join(bad_lines), newline="")) if r]
+        if rows:
+            width = len(names)
+            padded = [(r + [""] * width)[:width] for r in rows]
+            columns = [pa.array([r[j] or None for r in padded], pa.string()) for j in range(width)]
+            yield self._batch(columns, names, partition.folder)
 
     def commit(self, end: dict) -> None:
         # offsets live in the checkpoint; sink-side watermark is B11.
@@ -507,34 +320,14 @@ class SynapseLinkDataSource(DataSource):
         entity = self.options.get("entity")
         if not root or not entity:
             raise ValueError("synapse_link source requires 'path' and 'entity' options")
-        # Schema is resolved from the NEWEST batch folder's model.json (per-
-        # batch schemas, §1.3) falling back to the container-root model.json
-        # — a restarted stream picks up mid-stream ADD COLUMNs, matching the
-        # reference's staging-vs-target diff (B10) driven from batch schemas.
-        src = SynapseLinkSource(root, entity)
-        folders = src.list_folders()
-        if folders:
-            entity_obj = src.entity_schema(folders[-1])
-        else:
-            with open(os.path.join(root, "model.json")) as fh:
-                model = parse_model(fh.read())
-            if entity not in model:
-                raise ValueError(f"entity {entity!r} not in {root}/model.json")
-            entity_obj = model[entity]
-        schema = entity_obj.typed_schema()
-        # provenance column: which batch folder (source version) each row
-        # came from — lets the sink commit a B11 watermark per micro-batch
-        return schema.add("_batch_folder", "string", nullable=False)
+        return stream_schema(SynapseLinkSource(root, entity).stream_entity())
 
     def streamReader(self, schema: StructType) -> SynapseLinkStreamReader:
-        data_fields = [f for f in schema.fields if f.name != "_batch_folder"]
         return SynapseLinkStreamReader(
             self.options["path"],
             self.options["entity"],
             max_folders_per_trigger=int(self.options.get("maxfolderspertrigger", 0)),
-            query_columns=tuple(f.name for f in data_fields),
-            query_types=tuple(f.dataType for f in data_fields),
-            use_arrow=self.options.get("arrowbatches", "true").lower() != "false",
+            query_columns=tuple(f.name for f in schema.fields if f.name != "_batch_folder"),
             chunk_bytes=int(self.options.get("chunkbytes", DEFAULT_CHUNK_BYTES)),
         )
 
@@ -587,8 +380,7 @@ __all__ = [
     "SynapseLinkDataSource",
     "SynapseLinkStreamReader",
     "CsvChunkPartition",
-    "parse_timestamp_py",
-    "parse_value_py",
     "register",
+    "stream_schema",
     "FOLDER_RE",
 ]

@@ -198,6 +198,14 @@ class SynapseLinkSource:
                     return model[self.entity_name]
         raise FileNotFoundError(f"no model.json declares entity {self.entity_name!r}")
 
+    def stream_entity(self) -> CdmEntity:
+        """The schema a stream starts with: the NEWEST batch folder's
+        (per-batch schemas, §1.3), else the container root's — a restarted
+        stream picks up mid-stream ADD COLUMNs, matching the reference's
+        staging-vs-target diff (B10) driven from batch schemas."""
+        folders = self.list_folders()
+        return self.entity_schema(folders[-1] if folders else None)
+
     # ---- data (A3/B21) -----------------------------------------------------
     def batch_csvs(self, folder: BatchFolder) -> list[str]:
         """CSV chunk paths of one batch folder (empty if none)."""
@@ -209,14 +217,15 @@ class SynapseLinkSource:
         ]
 
     def read_batch(
-        self, spark: SparkSession, folder: BatchFolder, parity_known: bool = False
+        self, spark: SparkSession, folder: BatchFolder, line_splittable: bool | None = None
     ) -> DataFrame | None:
-        """All CSV chunks of one batch folder as one typed DataFrame."""
+        """All CSV chunks of one batch folder as one typed DataFrame
+        (``line_splittable``: see ``read_entity_csv``)."""
         csvs = self._data_paths(self.batch_csvs(folder))
         if not csvs:
             return None
         return read_entity_csv(
-            spark, csvs, self.entity_schema(folder), parity_known=parity_known
+            spark, csvs, self.entity_schema(folder), line_splittable=line_splittable
         )
 
     def folder_row_counts(
@@ -229,11 +238,11 @@ class SynapseLinkSource:
         from pyspark.sql import functions as F
 
         all_csvs = self._data_paths([p for f in folders for p in self.batch_csvs(f)])
-        parity_known = bool(all_csvs) and paths_are_line_splittable(spark, all_csvs)
+        splittable = bool(all_csvs) and paths_are_line_splittable(spark, all_csvs)
         tagged = [
             d.select(F.lit(f.name).alias("__folder"))
             for f in folders
-            if (d := self.read_batch(spark, f, parity_known=parity_known)) is not None
+            if (d := self.read_batch(spark, f, line_splittable=splittable)) is not None
         ]
         counts = {f.name: 0 for f in folders}
         if not tagged:
@@ -263,7 +272,7 @@ class SynapseLinkSource:
         ]
         if not with_csvs:
             return None
-        parity_known = paths_are_line_splittable(
+        splittable = paths_are_line_splittable(
             spark, [p for _, csvs in with_csvs for p in csvs]
         )
         # consecutive same-schema runs → one read each
@@ -275,7 +284,7 @@ class SynapseLinkSource:
             else:
                 runs.append((schema, list(csvs)))
         dfs = [
-            read_entity_csv(spark, csvs, schema, parity_known=parity_known)
+            read_entity_csv(spark, csvs, schema, line_splittable=splittable)
             for schema, csvs in runs
         ]
         out = dfs[0]

@@ -29,7 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.dedup import latest_by_version
 from ..operators.merge import cdc_merge
 from ..operators.retry import RetryPolicy, with_retry
-from ..operators.transforms import normalize_column_names, select_fields, with_merge_key
+from ..operators.transforms import (
+    ESSENTIAL_FIELDS,
+    normalize_column_names,
+    select_fields,
+    with_merge_key,
+)
 from ..sources.synapse import BatchFolder, SynapseLinkSource
 from ..tables import VersionedTable, type_changes
 from .observability import MetricsRecorder
@@ -243,14 +248,12 @@ class StreamRunner:
     def _prepare(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
 
-        df = normalize_column_names(df)
-        if self.spec.essential_fields:
-            df = select_fields(
-                df, self.spec.field_selection_mode, self.spec.fields,
-                essential=self.spec.essential_fields,
-            )
-        else:
-            df = select_fields(df, self.spec.field_selection_mode, self.spec.fields)
+        df = select_fields(
+            normalize_column_names(df),
+            self.spec.field_selection_mode,
+            self.spec.fields,
+            essential=self.spec.essential_fields or ESSENTIAL_FIELDS,
+        )
         df = with_merge_key(df, self.spec.key_column)
         # rows without a merge key cannot participate in MERGE; dropping
         # them keeps null-key garbage out of the dedup window
@@ -350,14 +353,19 @@ class StreamRunner:
         df = self.source.read_folders(self.spark, folders)
         if df is None:
             return 0
-        staged = latest_by_version(
-            self._prepare(df), version_col=self.spec.version_column
-        )
+        self._finalize(latest_by_version(self._prepare(df), version_col=self.spec.version_column))
+        self.table.set_watermark(folders[-1].name)
+        return self.table.read(self.spark).count()
+
+    def _finalize(self, staged: DataFrame) -> None:
+        """Commit a deduplicated backfill, retried as a backfill: Overwrite
+        drops deletes and replaces the snapshot atomically (B15); Merge
+        folds it into the live target without destroying it (B16)."""
+
         def finalize() -> None:
             if self.spec.backfill_behavior == "Overwrite":
-                # drop deletes; atomic snapshot replace (B15)
                 self.table.commit(self._drop_deletes(staged))
-            else:  # Merge (B16) — non-destructive fold into live target
+            else:
                 self.table.commit(
                     cdc_merge(
                         self._target(),
@@ -370,8 +378,6 @@ class StreamRunner:
                 )
 
         with_retry(finalize, self.spec.retry, is_backfill=True)
-        self.table.set_watermark(folders[-1].name)
-        return self.table.read(self.spark).count()
 
     # ---- sharded resumable backfill (B14 + B17) -----------------------------
     def backfill_sharded(self, backfill_id: str, num_shards: int = 4) -> int:
@@ -436,20 +442,7 @@ class StreamRunner:
             for d in dfs[1:]:
                 union = union.unionByName(d, allowMissingColumns=True)
             # cross-shard dedup (same key may appear in several folders)
-            staged = latest_by_version(union, version_col=self.spec.version_column)
-            if self.spec.backfill_behavior == "Overwrite":
-                self.table.commit(self._drop_deletes(staged))
-            else:
-                self.table.commit(
-                    cdc_merge(
-                        self._target(),
-                        staged,
-                        version_col=self.spec.version_column,
-                        is_delete_col=self.spec.is_delete_column,
-                        allow_schema_evolution=not self.spec.is_unified_schema,
-                        dedup_staged=False,
-                    )
-                )
+            self._finalize(latest_by_version(union, version_col=self.spec.version_column))
         self.table.set_watermark(state["head"])
         # dispose (B12): drop staging + state after successful finalize
         shutil.rmtree(staging_root, ignore_errors=True)

@@ -36,7 +36,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.merge import cdc_merge
-from ..sources.stream import register
+from ..sources.cdm import apply_schema
+from ..sources.stream import register, stream_schema
+from ..sources.synapse import SynapseLinkSource
 from ..streaming.runner import StreamRunner, StreamSpec
 
 # Test-only fault injection point: called as fault_hook(stage, batch_id)
@@ -328,16 +330,24 @@ def _compact_batches_locked(
 
 
 def read_stream(spark: SparkSession, spec: StreamSpec) -> DataFrame:
-    """Build the streaming source for a spec.  Volume-scaled admission:
-    the spec's throughput block drives the source's per-trigger caps —
-    ``max_folders_per_tick`` maps onto ``maxFoldersPerTrigger`` (the same
-    coarse B6/B18 cap the batch runner enforces per tick) so the batch
-    and structured paths shape intake identically, and oversized batch
-    CSVs are byte-range-split for a full-width parallel parse
-    (``chunkBytes``, sources/stream.py:_csv_split_points)."""
+    """Build the typed streaming source for a spec.
+
+    The source tokenizes only (raw strings + ``_batch_folder``); the
+    stream's entity is resolved once here, handed to the source as its
+    schema, and its columns are typed by ``cdm.apply_schema`` — the casts
+    the batch reader uses, so both paths read the same bytes the same way.
+
+    Volume-scaled admission: ``max_folders_per_tick`` maps onto
+    ``maxFoldersPerTrigger`` (the same coarse B6/B18 cap the batch runner
+    enforces per tick) so the batch and structured paths shape intake
+    identically, and oversized batch CSVs are byte-range-split for a
+    full-width parallel parse (``chunkBytes``,
+    sources/stream.py:_csv_split_points)."""
     register(spark)
+    entity = SynapseLinkSource(spec.source_root, spec.entity_name).stream_entity()
     reader = (
         spark.readStream.format("synapse_link")
+        .schema(stream_schema(entity))
         .option("path", spec.source_root)
         .option("entity", spec.entity_name)
     )
@@ -345,7 +355,7 @@ def read_stream(spark: SparkSession, spec: StreamSpec) -> DataFrame:
         reader = reader.option("maxFoldersPerTrigger", spec.max_folders_per_tick)
     if spec.chunk_bytes:
         reader = reader.option("chunkBytes", spec.chunk_bytes)
-    return reader.load()
+    return apply_schema(reader.load(), entity, "_batch_folder")
 
 
 def run_structured(

@@ -37,6 +37,7 @@ would rewrite — mirrored here by partitioning snapshots on a key bucket.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -392,47 +393,56 @@ class VersionedTable:
                 f"({', '.join(widened)}); untouched buckets would keep the old "
                 "type — commit the whole table (touched_buckets=None)"
             )
-        self._claim_version(new_v)
+        claim = self._claim_version(new_v)
         out = self._snapshot_dir(new_v)
-        if bucketed and "__bucket" not in df.columns:
-            df = df.withColumn("__bucket", self.bucket_expr())
-        # time/identity transform partition levels (bucket stays outermost so
-        # incremental commits keep hard-linking whole untouched bucket dirs)
-        tnames: list[str] = []
-        for kind, col in self.partition_transforms:
-            if col in df.columns:
-                name = f"__p_{kind}_{col}"
-                df = df.withColumn(name, self._transform_expr(kind, col))
-                tnames.append(name)
-        part_cols = (["__bucket"] if bucketed else []) + tnames
+        try:
+            if bucketed and "__bucket" not in df.columns:
+                df = df.withColumn("__bucket", self.bucket_expr())
+            # time/identity transform partition levels (bucket stays outermost so
+            # incremental commits keep hard-linking whole untouched bucket dirs)
+            tnames: list[str] = []
+            for kind, col in self.partition_transforms:
+                if col in df.columns:
+                    name = f"__p_{kind}_{col}"
+                    df = df.withColumn(name, self._transform_expr(kind, col))
+                    tnames.append(name)
+            part_cols = (["__bucket"] if bucketed else []) + tnames
 
-        if sort_override is not None:
-            sort_cols = [c for c in sort_override if c in df.columns]
-        else:
-            sort_cols = [c for c in self.sorted_by if c in df.columns]
-        if sort_cols:
-            df = df.sortWithinPartitions(*part_cols, *sort_cols)
-            aux = [c for c in sort_cols if c.startswith("__")]
-            if aux:
-                df = df.drop(*aux)  # projection only — row order is kept
-        w = df.write.mode("overwrite")
-        if self.max_rows_per_file > 0:
-            w = w.option("maxRecordsPerFile", str(self.max_rows_per_file))
-        for c in self.bloom_filter_columns:
-            if c in df.columns:
-                w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(out)
+            if sort_override is not None:
+                sort_cols = [c for c in sort_override if c in df.columns]
+            else:
+                sort_cols = [c for c in self.sorted_by if c in df.columns]
+            if sort_cols:
+                df = df.sortWithinPartitions(*part_cols, *sort_cols)
+                aux = [c for c in sort_cols if c.startswith("__")]
+                if aux:
+                    df = df.drop(*aux)  # projection only — row order is kept
+            w = df.write.mode("overwrite")
+            if self.max_rows_per_file > 0:
+                w = w.option("maxRecordsPerFile", str(self.max_rows_per_file))
+            for c in self.bloom_filter_columns:
+                if c in df.columns:
+                    w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
+            if part_cols:
+                w = w.partitionBy(*part_cols)
+            w.parquet(out)
 
-        if linking:
-            prev = self._snapshot_dir(new_v - 1)
-            keep = {f"__bucket={int(b)}" for b in touched_buckets}
-            for name in os.listdir(prev):
-                if name.startswith("__bucket=") and name not in keep:
-                    self._link_dir(os.path.join(prev, name), os.path.join(out, name))
-        self._write_manifest(new_v, df.schema, part_cols, prev_schema)
-        self._write_atomic(self._pointer_path(), str(new_v))
+            if linking:
+                prev = self._snapshot_dir(new_v - 1)
+                keep = {f"__bucket={int(b)}" for b in touched_buckets}
+                for name in os.listdir(prev):
+                    if name.startswith("__bucket=") and name not in keep:
+                        self._link_dir(os.path.join(prev, name), os.path.join(out, name))
+            self._write_manifest(new_v, df.schema, part_cols, prev_schema)
+            self._write_atomic(self._pointer_path(), str(new_v))
+        except BaseException:
+            # a failed write must not hold the version: drop this writer's
+            # partial snapshot and claim so the retry (or the next writer)
+            # can take v<new_v> at once instead of after claim_ttl_s
+            shutil.rmtree(out, ignore_errors=True)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(claim)
+            raise
         return new_v
 
     def _schema_of(self, spark: SparkSession, version: int) -> StructType:
@@ -475,7 +485,8 @@ class VersionedTable:
 
     claim_ttl_s: float = 3600.0
 
-    def _claim_version(self, version: int) -> None:
+    def _claim_version(self, version: int) -> str:
+        """Claim ``version`` by exclusive create; returns the claim path."""
         claims = os.path.join(self._meta, "claims")
         os.makedirs(claims, exist_ok=True)
         path = os.path.join(claims, str(version))
@@ -506,6 +517,7 @@ class VersionedTable:
             ) from None
         os.write(fd, f"{os.getpid()}".encode())
         os.close(fd)
+        return path
 
     @staticmethod
     def _transform_expr(kind: str, col: str):

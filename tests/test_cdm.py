@@ -275,6 +275,36 @@ def test_csv_line_splittable_fast_path(spark, tmp_path):
         csv.writer(fh, quoting=csv.QUOTE_MINIMAL, doublequote=True).writerows(nl_rows)
     assert _read_line_splittable(spark, str(nl), entity) is None
     got = sorted(
-        tuple(r) for r in read_entity_csv(spark, str(nl), entity, line_splittable=True).collect()
+        tuple(r) for r in read_entity_csv(spark, str(nl), entity).collect()
     )
     assert got == [("1", "line1\nline2", 5), ("2", "plain", 6)]
+
+
+def test_parity_probe_runs_once_per_read_range(spark, tmp_path, monkeypatch):
+    """read_folders probes quote parity once over the whole range and hands
+    the answer to every same-schema read: a range of three folders (three
+    reads — the middle folder adds a column) with one quoted newline runs
+    the probe once, and the rows still parse."""
+    from arcane_stream_microsoft_synapse_link_spark.sources import cdm, synapse
+
+    from .synapse_fixture import SynapseFixture, data_row, minus
+
+    fx = SynapseFixture(tmp_path / "source")
+    fx.write_folder(minus(hours=3), [data_row(KEYS[0], 1, "multi\nline")])
+    fx.upload_evolved_batch(minus(hours=2), KEYS[1], 2, "D2", extra_value="X")
+    fx.write_folder(minus(hours=1), [data_row(KEYS[2], 3, "D3")])
+    src = synapse.SynapseLinkSource(fx.root, ENTITY)
+
+    calls = []
+    probe = cdm.paths_are_line_splittable
+
+    def counting(spark, paths):
+        calls.append(paths)
+        return probe(spark, paths)
+
+    monkeypatch.setattr(cdm, "paths_are_line_splittable", counting)
+    monkeypatch.setattr(synapse, "paths_are_line_splittable", counting)
+    df = src.read_folders(spark, src.list_folders())
+    assert len(calls) == 1
+    got = {r["Id"]: r["displayvalue"] for r in df.collect()}
+    assert got == {KEYS[0]: "multi\nline", KEYS[1]: "D2", KEYS[2]: "D3"}

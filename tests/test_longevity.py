@@ -554,7 +554,7 @@ def test_pagerank_refresh_cost_curve_50_batches(spark, tmp_path):
             }
         )
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(__file__)), "SCALE_PR_REFRESH.json"), "w") as fh:
+    with open(tmp_path / "SCALE_PR_REFRESH.json", "w") as fh:
         json.dump({"per_batch_edges": per_batch, "iterations": 3, "curve": curve}, fh, indent=1)
     print("pagerank refresh curve:", curve)
 

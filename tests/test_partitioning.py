@@ -145,6 +145,28 @@ def test_commit_conflict_detection(spark, tmp_path):
     assert t.read(spark).count() == 10
 
 
+def test_failed_commit_releases_its_claim(spark, tmp_path):
+    """A commit whose plan fails raises and leaves neither its version
+    claim nor a partial snapshot, so the next valid commit (a retry) takes
+    that version at once instead of conflicting until the claim expires."""
+    t = VersionedTable(str(tmp_path / "t"))
+    df = spark.range(10).selectExpr("CAST(id AS STRING) AS arcane_merge_key", "id v")
+    assert t.commit(df) == 1
+
+    # one task: no straggler can write into the snapshot dir after the
+    # job has failed
+    bad = df.coalesce(1).withColumn(
+        "v", F.when(F.col("v") >= 0, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        t.commit(bad)
+    assert not os.path.exists(os.path.join(str(tmp_path / "t"), "_meta", "claims", "2"))
+    assert not os.path.exists(t._snapshot_dir(2))
+
+    assert t.commit(df) == 2
+    assert t.read(spark).count() == 10
+
+
 def _file_stats(path, cols):
     """Per-parquet-file [min, max] of each column under a snapshot dir."""
     import os

@@ -1,23 +1,20 @@
 """Structured Streaming path: the synapse_link Python DataSource feeding
 foreachBatch CDC merges. Replays the reference e2e oracle through the
 readStream API (offsets in the checkpoint, availableNow drain), and checks
-restart/resume semantics plus the Python parser twins."""
+restart/resume semantics."""
 
 from __future__ import annotations
 
 import os
-from datetime import datetime, timezone
-from decimal import Decimal
+from dataclasses import replace
 
 import pytest
 
-from arcane_stream_microsoft_synapse_link_spark.sources.cdm import CdmAttribute
-from arcane_stream_microsoft_synapse_link_spark.sources.stream import (
-    parse_timestamp_py,
-    parse_value_py,
-)
 from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner, StreamSpec
-from arcane_stream_microsoft_synapse_link_spark.streaming.structured import run_structured
+from arcane_stream_microsoft_synapse_link_spark.streaming.structured import (
+    read_stream,
+    run_structured,
+)
 
 from .synapse_fixture import BASE_VERSION, ENTITY, KEYS, SynapseFixture, minus
 
@@ -125,73 +122,6 @@ def test_schema_evolution_through_stream(spark, scenario):
     assert len(state) == 5 and state[KEYS[2]] == BASE_VERSION + 300
 
 
-def test_parse_timestamp_py_formats():
-    assert parse_timestamp_py("2020-01-01T00:15:00.0000000Z") == datetime(
-        2020, 1, 1, 0, 15, tzinfo=timezone.utc
-    )
-    assert parse_timestamp_py("2020-01-01T00:15:00.0000000+00:00") == datetime(
-        2020, 1, 1, 0, 15, tzinfo=timezone.utc
-    )
-    assert parse_timestamp_py("0001-01-03T00:00:00.0000000") == datetime(1, 1, 3)
-    # the nonstandard hour-0 12h clock: "0:04:05 PM" == 12:04:05
-    assert parse_timestamp_py("1/7/2021 0:04:05 PM") == datetime(2021, 1, 7, 12, 4, 5)
-    assert parse_timestamp_py("1/7/2021 12:04:05 AM") == datetime(2021, 1, 7, 0, 4, 5)
-    assert parse_timestamp_py("") is None
-    assert parse_timestamp_py("not a date") is None
-
-
-def test_parse_value_py_casts():
-    assert parse_value_py("42", CdmAttribute("x", "int64")) == 42
-    assert parse_value_py("", CdmAttribute("x", "int64")) is None
-    assert parse_value_py("True", CdmAttribute("x", "boolean")) is True
-    assert parse_value_py("", CdmAttribute("x", "boolean")) is None
-    assert parse_value_py("1.5", CdmAttribute("x", "decimal")) == Decimal("1.5")
-    assert parse_value_py("abc", CdmAttribute("x", "int64")) is None  # try-cast → null
-    assert parse_value_py("", CdmAttribute("x", "string")) == ""  # strings preserved
-
-
-def test_arrow_and_tuple_read_paths_agree(scenario):
-    """The Arrow fast path (C++ CSV parse + columnar convert, incl. the
-    ragged-sparse-delete-row fallback batch) must produce exactly the rows
-    of the per-row tuple path — same values, same types, same nulls."""
-    from datetime import timezone as _tz
-
-    from arcane_stream_microsoft_synapse_link_spark.sources.stream import (
-        SynapseLinkStreamReader,
-    )
-    from arcane_stream_microsoft_synapse_link_spark.sources.synapse import SynapseLinkSource
-
-    fx, spec, _ = scenario
-    fx.upload_batch(minus(hours=1), add_delete=True, add_upsert=True, update_changelog=True)
-    src = SynapseLinkSource(spec.source_root, ENTITY)
-    folders = src.list_folders()
-    entity = src.entity_schema(folders[-1])
-    kw = dict(
-        query_columns=tuple(a.name for a in entity.attributes),
-        query_types=tuple(a.spark_type() for a in entity.attributes),
-    )
-    r_arrow = SynapseLinkStreamReader(spec.source_root, ENTITY, use_arrow=True, **kw)
-    r_tuple = SynapseLinkStreamReader(spec.source_root, ENTITY, use_arrow=False, **kw)
-    assert r_arrow._use_arrow  # pyarrow is available in this environment
-
-    def norm(v):
-        # tuple path leaves zone-less timestamps naive; arrow arrays are
-        # tz-aware UTC (session tz pinned UTC) — same instant either way
-        if isinstance(v, datetime) and v.tzinfo is None:
-            return v.replace(tzinfo=_tz.utc)
-        return v
-
-    parts = r_arrow.partitions({"folder": ""}, {"folder": folders[-1].name})
-    assert parts
-    for p in parts:
-        t_rows = sorted(tuple(norm(v) for v in row) for row in r_tuple.read(p))
-        a_rows = []
-        for b in r_arrow.read(p):
-            for i in range(b.num_rows):
-                a_rows.append(tuple(norm(col[i].as_py()) for col in b.columns))
-        assert sorted(a_rows) == t_rows
-
-
 def test_max_folders_per_trigger_caps_admission(spark, scenario):
     """B18 static shaper: a continuously-triggered stream with
     maxFoldersPerTrigger=1 admits one folder per micro-batch (availableNow
@@ -204,10 +134,8 @@ def test_max_folders_per_trigger_caps_admission(spark, scenario):
     fx.upload_batch(minus(hours=2))
     fx.upload_batch(minus(hours=1), add_upsert=True, update_changelog=True)
 
-    from arcane_stream_microsoft_synapse_link_spark.sources.stream import register
     from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner
 
-    register(spark)
     runner = StreamRunner(spark, spec)
 
     def merge_batch(batch_df, batch_id):
@@ -219,11 +147,7 @@ def test_max_folders_per_trigger_caps_admission(spark, scenario):
         runner._merge_folder_batch(batch_df.drop("_batch_folder"), up_to_folder=wm)
 
     q = (
-        spark.readStream.format("synapse_link")
-        .option("path", spec.source_root)
-        .option("entity", spec.entity_name)
-        .option("maxFoldersPerTrigger", 1)
-        .load()
+        read_stream(spark, replace(spec, max_folders_per_tick=1))
         .writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", ckpt)
         .trigger(processingTime="1 second")
