@@ -114,15 +114,18 @@ def parse_timestamp(col: Column) -> Column:
 
     The nonstandard ``1/1/2020 0:00:00 PM`` (hour 0 in a 12-hour clock)
     cannot parse under any strict pattern; we normalize hour 0 → 12 before
-    the 12-hour attempt, treating "0:00:00 PM" as noon. Entirely JVM-side
-    (try_to_timestamp coalesce chain) — no Python in the hot path.
+    the 12-hour attempt, treating "0:00:00 PM" as noon. The value's shape
+    picks the pattern: only the US form has a ``/``, so a US value never
+    pays the three failing ISO attempts and an ISO value never pays the
+    12-hour one. Entirely JVM-side (try_to_timestamp) — no Python in the
+    hot path.
     """
     trimmed = F.trim(col)
     cleaned = F.when(trimmed == "", None).otherwise(trimmed)
     us12 = F.regexp_replace(cleaned, r"^(\d{1,2}/\d{1,2}/\d{4}) 0:", r"$1 12:")
-    attempts = [F.try_to_timestamp(cleaned, F.lit(f)) for f in _TS_FORMATS[:3]]
-    attempts.append(F.try_to_timestamp(us12, F.lit(_TS_FORMATS[3])))
-    return F.coalesce(*attempts)
+    iso = F.coalesce(*[F.try_to_timestamp(cleaned, F.lit(f)) for f in _TS_FORMATS[:3]])
+    us = F.try_to_timestamp(us12, F.lit(_TS_FORMATS[3]))
+    return F.when(F.instr(cleaned, "/") > 0, us).otherwise(iso)
 
 
 def cast_attribute(col: Column, attr: CdmAttribute) -> Column:

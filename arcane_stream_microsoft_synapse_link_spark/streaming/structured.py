@@ -12,26 +12,39 @@ replace change-capture vs batch-backfill scheduling
 ``StreamRunner`` (runner.py) remains as the driver-side fallback loop the
 survey's M3 plan calls for; both share the same transform + merge chain.
 
-Replay contract of the curation intake streams (dedup / decontaminate /
-media dedup / ANN fold-in / curation gate): every per-batch output is
-written into a ``batch_id=N`` partition directory with ``mode("overwrite")``
-(``write_batch``), so Spark's foreachBatch replay of an uncommitted batch
-REPLACES the crashed attempt's partial output instead of appending next to
-it — the same effectively-exactly-once discipline the reference enforces
-with stage→merge→watermark ordering (StreamRunner.scala:198-233) and the
-CDC core enforces with idempotent MERGE + commit-then-watermark, expressed
-in the idiom of an append-only parquet layout.  Readers inside ``step``
-use ``read_batches(..., before=batch_id)``: only COMPLETE (``_SUCCESS``)
-batch partitions strictly older than the replaying batch are visible, so
-a crashed attempt's partial index/corpus rows can never match against
-their own replay.
+The streaming intake gates (``run_*_stream``) all run through one
+combinator, ``_run_gate``, and its replay contract is theirs: a gate's
+step sees each micro-batch with a ``_GateBatch`` handle onto the gate's
+stores (``work_dir/<store>/``).
+
+- ``g.write(store, df)`` lands the batch's rows in
+  ``<store>/batch_id=N/`` with ``mode("overwrite")`` (``write_batch``), so
+  Spark's foreachBatch replay of an uncommitted batch REPLACES the crashed
+  attempt's partial output instead of appending next to it — the
+  effectively-exactly-once discipline the reference enforces with
+  stage→merge→watermark ordering (StreamRunner.scala:198-233) and the CDC
+  core with idempotent MERGE + commit-then-watermark, in the idiom of an
+  append-only parquet layout.  Each write is followed by the test-only
+  crash point ``fault_hook("after_<store>", batch_id)``.
+- ``g.prior(store)`` is ``read_batches(..., before=batch_id)``: only
+  COMPLETE (``_SUCCESS``) batch partitions strictly older than the
+  replaying batch are visible, so a crashed attempt's partial index/corpus
+  rows can never match against their own replay.
+- With ``compact_every=N`` the combinator compacts every store after each
+  N-th batch, keeping the two newest batches (the replay window)
+  un-compacted.
 """
 
 from __future__ import annotations
 
+import operator
 import os
+import shutil
 import time
 from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,8 +55,9 @@ from ..sources.synapse import SynapseLinkSource
 from ..streaming.runner import StreamRunner, StreamSpec
 
 # Test-only fault injection point: called as fault_hook(stage, batch_id)
-# after each per-batch append so the kill-between-appends replay tests can
-# crash the query at the exact window the batch-keyed layout protects.
+# after each per-batch write (stage ``after_<store>``) so the
+# kill-between-appends replay tests can crash the query at the exact
+# window the batch-keyed layout protects.
 FaultHook = Callable[[str, int], None]
 
 
@@ -241,7 +255,6 @@ def _compact_batches_locked(
     spark: SparkSession, root: str, keep_last: int, target_partitions: int
 ) -> int:
     import json
-    import shutil
 
     manifest = _read_manifest(root)
     old_segments = manifest["segments"]
@@ -425,6 +438,65 @@ def windowed_event_counts(
     )
 
 
+@dataclass(frozen=True)
+class _GateBatch:
+    """One micro-batch as a gate step sees it: replay-safe reads and
+    writes of the gate's stores (``work_dir/<store>``), keyed by
+    ``batch_id`` (the replay contract in the module docstring)."""
+
+    spark: SparkSession
+    work_dir: str
+    batch_id: int
+    fault_hook: FaultHook | None
+
+    def prior(self, store: str) -> DataFrame | None:
+        """The store's complete batches older than this one; ``None``
+        before the first."""
+        return read_batches(
+            self.spark, os.path.join(self.work_dir, store), before=self.batch_id
+        )
+
+    def write(
+        self, store: str, df: DataFrame, partition_by: tuple[str, ...] = ()
+    ) -> None:
+        write_batch(df, os.path.join(self.work_dir, store), self.batch_id, partition_by)
+        self.fault(f"after_{store}")
+
+    def fault(self, stage: str) -> None:
+        if self.fault_hook:
+            self.fault_hook(stage, self.batch_id)
+
+
+def _run_gate(
+    spark: SparkSession,
+    source: DataFrame,
+    work_dir: str,
+    checkpoint_dir: str,
+    step: Callable[[DataFrame, _GateBatch], None],
+    fault_hook: FaultHook | None = None,
+    compact_every: int | None = None,
+):
+    """Start an ``availableNow`` foreachBatch query that hands every
+    micro-batch to ``step`` with a ``_GateBatch`` handle, then, after every
+    ``compact_every``-th batch, compacts the gate's stores.  ``keep_last=2``
+    keeps this batch and its predecessor un-compacted, so a replay of
+    either never collides with a segment; compaction itself is
+    replay-idempotent (manifest commit point).  Returns the started
+    StreamingQuery."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        step(batch_df, _GateBatch(spark, work_dir, batch_id, fault_hook))
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            compact_gate_state(spark, work_dir, keep_last=2)
+
+    return (
+        source.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def run_dedup_stream(
     spark: SparkSession,
     source: DataFrame,
@@ -451,52 +523,27 @@ def run_dedup_stream(
        ``band_index/`` (bucket the index table by ``(band, bh)`` in a
        production layout so step 1's probe prunes partitions).
 
-    Replay-idempotent: each append is a ``write_batch`` (batch_id-keyed
-    overwrite) and index/corpus reads see only complete batches strictly
-    older than the current one — a crash between the three appends re-runs
-    the batch, REPLACING its partial output, never duplicating it (see the
-    module docstring's replay contract).  Returns the started
-    StreamingQuery."""
+    Returns the started StreamingQuery."""
     from pyspark.sql import functions as F
 
     from ..functions.dedup import incremental_near_duplicates, minhash_band_index
 
-    idx_dir = os.path.join(work_dir, "band_index")
-    corpus_dir = os.path.join(work_dir, "corpus")
-    hits_dir = os.path.join(work_dir, "hits")
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
         batch_df = batch_df.select(id_col, text_col).localCheckpoint()
-        index = read_batches(spark, idx_dir, before=batch_id)
+        index = g.prior("band_index")
         if index is not None:
-            corpus = read_batches(spark, corpus_dir, before=batch_id)
             hits = incremental_near_duplicates(
-                batch_df, index, corpus, threshold, text_col, id_col
+                batch_df, index, g.prior("corpus"), threshold, text_col, id_col
             ).localCheckpoint()
-            write_batch(hits, hits_dir, batch_id)
-            if fault_hook:
-                fault_hook("after_hits", batch_id)
+            g.write("hits", hits)
             dup_ids = hits.select(F.col("id_a").alias(id_col)).distinct()
             kept = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint()
         else:
             kept = batch_df
-        write_batch(kept, corpus_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_corpus", batch_id)
-        write_batch(minhash_band_index(kept, text_col, id_col), idx_dir, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            # in-line small-files maintenance: keep_last=2 keeps this
-            # batch and its predecessor un-compacted, so a replay of
-            # either never collides with a segment; compaction itself is
-            # replay-idempotent (manifest commit point)
-            compact_gate_state(spark, work_dir, keep_last=2)
+        g.write("corpus", kept)
+        g.write("band_index", minhash_band_index(kept, text_col, id_col))
 
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook, compact_every)
 
 
 def run_url_dedup_stream(
@@ -524,19 +571,13 @@ def run_url_dedup_stream(
     batch-sized agg, and one key join against the index (bucket
     ``url_index`` by the canonical key's hash in a production layout so
     the probe prunes).  Rejections land in ``hits/`` with the stage that
-    caught them (``batch`` vs ``index``).  Replay-idempotent under the
-    module's write_batch/read-before contract: a crash between the three
-    appends re-runs the batch, replacing partial output.  Returns the
-    started StreamingQuery."""
+    caught them (``batch`` vs ``index``).  Returns the started
+    StreamingQuery."""
     from pyspark.sql import functions as F
 
     from ..functions.web import canonicalize_url
 
-    idx_dir = os.path.join(work_dir, "url_index")
-    corpus_dir = os.path.join(work_dir, "corpus")
-    hits_dir = os.path.join(work_dir, "hits")
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
         batch_df = batch_df.withColumn(
             "canon_url", canonicalize_url(F.col(url_col))
         ).localCheckpoint()
@@ -559,34 +600,21 @@ def run_url_dedup_stream(
             .select("canon_url", id_col)
             .withColumn("reason", F.lit("batch"))
         )
-        index = read_batches(spark, idx_dir, before=batch_id)
-        if index is not None:
-            known = index.select("canon_url").distinct()
-            kept = best.join(known, "canon_url", "left_anti").localCheckpoint()
-            hits = rejected_batch.unionByName(
-                best.join(known, "canon_url", "left_semi")
-                .select("canon_url", id_col)
-                .withColumn("reason", F.lit("index"))
-            )
-        else:
-            kept = best.localCheckpoint()
-            hits = rejected_batch
-        write_batch(hits, hits_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_hits", batch_id)
-        write_batch(kept, corpus_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_corpus", batch_id)
-        write_batch(kept.select("canon_url"), idx_dir, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_gate_state(spark, work_dir, keep_last=2)
+        index = g.prior("url_index")
+        if index is None:
+            index = spark.createDataFrame([], "canon_url string")
+        known = index.select("canon_url").distinct()
+        kept = best.join(known, "canon_url", "left_anti").localCheckpoint()
+        hits = rejected_batch.unionByName(
+            best.join(known, "canon_url", "left_semi")
+            .select("canon_url", id_col)
+            .withColumn("reason", F.lit("index"))
+        )
+        g.write("hits", hits)
+        g.write("corpus", kept)
+        g.write("url_index", kept.select("canon_url"))
 
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook, compact_every)
 
 
 def compact_gate_state(
@@ -614,6 +642,37 @@ def compact_gate_state(
     return out
 
 
+def _hash_index_step(
+    index_store: str,
+    clean: Callable[[DataFrame, DataFrame | None], DataFrame],
+    hashes: Callable[[DataFrame], DataFrame],
+    text_col: str,
+    id_col: str,
+) -> Callable[[DataFrame, _GateBatch], None]:
+    """Step of the hash-index cleaning gates (span and exact-substring
+    dedup): ``clean(batch, known)`` cuts every hash already in
+    ``index_store`` from the batch, the cleaned documents (original +
+    cleaned text, removal counts) go to ``corpus/``, then the batch's
+    not-yet-known distinct hashes (``hashes(batch)``, column ``h``) go to
+    ``index_store``.  Only the batch is hashed — the admitted corpus never
+    is, so per-batch cost is O(batch)."""
+
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
+        batch_df = batch_df.select(id_col, text_col).localCheckpoint()
+        known = g.prior(index_store)
+        cleaned = clean(batch_df, known).localCheckpoint()
+        g.write(
+            "corpus",
+            batch_df.withColumnsRenamed({id_col: "doc_id"}).join(cleaned, "doc_id"),
+        )
+        fresh = hashes(batch_df).select("h").distinct()
+        if known is not None:
+            fresh = fresh.join(known.select("h").distinct(), "h", "left_anti")
+        g.write(index_store, fresh)
+
+    return step
+
+
 def run_span_dedup_stream(
     spark: SparkSession,
     source: DataFrame,
@@ -634,63 +693,24 @@ def run_span_dedup_stream(
     n-gram contamination → ``run_decontaminate_stream``, sub-document
     spans → here).
 
-    Per micro-batch (foreachBatch):
-
-    1. clean the batch with ``span_dedup(batch, known=index)`` — spans
-       already in the index are removed from EVERY batch occurrence
-       (their keeper copy was admitted by an earlier batch); fresh spans
-       get the within-batch global-keep-first rule.  Only the batch is
-       hashed — the admitted corpus is never re-hashed, so per-batch
-       cost is O(batch) like the other gates;
-    2. append the cleaned documents (original + cleaned text, removal
-       counts) to ``corpus/``;
-    3. append the batch's not-yet-known distinct span hashes to
-       ``span_index/`` (hash-only rows: the index carries 32-byte md5
-       strings, never text — at 100 TB it stays a fraction of corpus
-       size and the probe join is AQE-broadcast while it fits).
-
-    Hashes are taken from the ORIGINAL batch text (C4 semantics: spans
-    created by stitching sentences around a removal are not re-checked).
-    Replay-idempotent via the module's ``write_batch`` batch_id-keyed
-    overwrite + ``read_batches(before=batch_id)`` discipline: a crash
-    between the corpus and index appends replays the batch into the same
-    partitions — never double-admitting rows or index hashes."""
-    from pyspark.sql import functions as F
-
+    Spans already in ``span_index/`` are removed from EVERY batch
+    occurrence (their keeper copy was admitted by an earlier batch);
+    fresh spans get the within-batch global-keep-first rule.  The index
+    carries 32-byte md5 strings, never text — at 100 TB it stays a
+    fraction of corpus size and the probe join is AQE-broadcast while it
+    fits.  Hashes are taken from the ORIGINAL batch text (C4 semantics:
+    spans created by stitching sentences around a removal are not
+    re-checked)."""
     from ..functions.dedup import span_dedup, span_hashes
 
-    idx_dir = os.path.join(work_dir, "span_index")
-    corpus_dir = os.path.join(work_dir, "corpus")
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint()
-        known = read_batches(spark, idx_dir, before=batch_id)
-        cleaned = span_dedup(
-            batch_df, known, sentence_words, span_sents, text_col, id_col
-        ).localCheckpoint()
-        out = batch_df.withColumnsRenamed({id_col: "doc_id"}).join(
-            cleaned, "doc_id"
-        )
-        write_batch(out, corpus_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_corpus", batch_id)
-        fresh = (
-            span_hashes(batch_df, sentence_words, span_sents, text_col, id_col)
-            .select("h")
-            .distinct()
-        )
-        if known is not None:
-            fresh = fresh.join(known.select("h").distinct(), "h", "left_anti")
-        write_batch(fresh, idx_dir, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_gate_state(spark, work_dir, keep_last=2)
-
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    step = _hash_index_step(
+        "span_index",
+        lambda b, known: span_dedup(b, known, sentence_words, span_sents, text_col, id_col),
+        lambda b: span_hashes(b, sentence_words, span_sents, text_col, id_col),
+        text_col,
+        id_col,
     )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook, compact_every)
 
 
 def run_exact_substring_stream(
@@ -712,57 +732,40 @@ def run_exact_substring_stream(
     fixed-granularity spans (run_span_dedup_stream) to the exact
     token-range form.
 
-    Per micro-batch (foreachBatch):
-
-    1. clean the batch with ``exact_substring_dedup(batch, known=index)``
-       — grams already in the index are removed from EVERY batch
-       occurrence (their keeper run was admitted earlier); fresh grams
-       get the within-batch global-keep-first rule.  Only the batch is
-       hashed — the admitted corpus is never re-hashed, O(batch) like
-       every other gate;
-    2. append the cleaned documents to ``corpus/``;
-    3. append the batch's not-yet-known distinct gram hashes to
-       ``gram_index/`` (hash-only rows — at 100 TB the index is one
-       32-byte hash per admitted token position, partition-pruned by the
-       gate's compaction cadence like the other stores).
-
-    Hashes are taken from the ORIGINAL batch text (ExactSubstr
-    semantics: runs created by stitching tokens around a removal are not
-    re-checked).  Replay-idempotent via the module's batch_id-keyed
-    ``write_batch`` overwrite + ``read_batches(before=batch_id)``
-    discipline."""
+    Grams already in ``gram_index/`` are removed from EVERY batch
+    occurrence (their keeper run was admitted earlier); fresh grams get
+    the within-batch global-keep-first rule.  The index is hash-only — at
+    100 TB one 32-byte hash per admitted token position, partition-pruned
+    by the gate's compaction cadence like the other stores.  Hashes are
+    taken from the ORIGINAL batch text (ExactSubstr semantics: runs
+    created by stitching tokens around a removal are not re-checked)."""
     from ..functions.dedup import exact_substring_dedup, exact_substring_grams
 
-    idx_dir = os.path.join(work_dir, "gram_index")
-    corpus_dir = os.path.join(work_dir, "corpus")
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint()
-        known = read_batches(spark, idx_dir, before=batch_id)
-        cleaned = exact_substring_dedup(
-            batch_df, known, min_len, text_col, id_col
-        ).localCheckpoint()
-        out = batch_df.withColumnsRenamed({id_col: "doc_id"}).join(cleaned, "doc_id")
-        write_batch(out, corpus_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_corpus", batch_id)
-        fresh = (
-            exact_substring_grams(batch_df, min_len, text_col, id_col)
-            .select("h")
-            .distinct()
-        )
-        if known is not None:
-            fresh = fresh.join(known.select("h").distinct(), "h", "left_anti")
-        write_batch(fresh, idx_dir, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_gate_state(spark, work_dir, keep_last=2)
-
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    step = _hash_index_step(
+        "gram_index",
+        lambda b, known: exact_substring_dedup(b, known, min_len, text_col, id_col),
+        lambda b: exact_substring_grams(b, min_len, text_col, id_col),
+        text_col,
+        id_col,
     )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook, compact_every)
+
+
+def _publish_once(path: str, build: Callable[[str], None]) -> None:
+    """Materialize ``path`` once, atomically: ``build(tmp)`` fills a fresh
+    sibling directory, which replaces ``path`` only when it holds
+    ``_SUCCESS``.  A crash mid-build leaves no ``_SUCCESS`` at ``path``,
+    so the next call rebuilds — a partial build is never accepted (it
+    would silently under-filter every later batch)."""
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return
+    tmp_dir = path + "._tmp"
+    shutil.rmtree(tmp_dir, ignore_errors=True)
+    build(tmp_dir)
+    if not os.path.exists(os.path.join(tmp_dir, "_SUCCESS")):
+        raise RuntimeError(f"{tmp_dir}: build finished without _SUCCESS")
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp_dir, path)
 
 
 def run_decontaminate_stream(
@@ -789,72 +792,46 @@ def run_decontaminate_stream(
     lifetime; re-reading parquet lets each batch's broadcast be GC'd).
     Per micro-batch: gram-explode the batch, left-semi against the gram
     set (broadcast — an eval suite is tiny next to the intake), write
-    contaminated ids to ``hits/`` and survivors to ``clean/`` — both as
-    batch_id-keyed ``write_batch`` overwrites, so a crash between the two
-    writes replays into the same partitions (replay contract, module
-    docstring).  Per-batch cost is O(batch) with zero cross-batch state.
+    contaminated ids to ``hits/`` and survivors to ``clean/``.  Per-batch
+    cost is O(batch) with zero cross-batch state.
 
     ``use_bloom=True`` swaps the exact gram set for the fixed-size Bloom
     path (``functions.dedup.bloom_gram_filter`` / ``bloom_probe_stats``):
     the persisted state becomes one 128 KiB bitmap regardless of
     benchmark size, and the per-batch check an Arrow bit test instead of
     a gram join — for eval suites too large to broadcast exactly.  Same
-    _SUCCESS build discipline, same batch_id-keyed replay contract;
-    flags are a deterministic superset of the exact path's (one-sided
-    Bloom FPs).
+    _SUCCESS build discipline; flags are a deterministic superset of the
+    exact path's (one-sided Bloom FPs).
     """
     from pyspark.sql import functions as F
 
-    from ..functions.dedup import words
+    from ..functions.dedup import bloom_gram_filter, bloom_probe_stats, words
     from ..functions.text import word_ngram_strings
 
     grams_dir = os.path.join(work_dir, "bench_grams")
     bloom_dir = os.path.join(work_dir, "bench_bloom")
-    clean_dir = os.path.join(work_dir, "clean")
-    hits_dir = os.path.join(work_dir, "hits")
 
     def exploded(d: DataFrame) -> DataFrame:
         return d.select(F.col(id_col), words(F.col(text_col)).alias("_w")).select(
             F.col(id_col), F.explode(word_ngram_strings(F.col("_w"), n)).alias("gram")
         )
 
-    # Reuse only a COMPLETE materialization: Spark writes _SUCCESS last, so
-    # a crash mid-write leaves a partial directory without it.  Accepting
-    # such a directory would silently under-filter every subsequent batch
-    # (contaminated docs admitted to clean/); rewriting into a fresh dir
-    # and atomically renaming keeps the check crash-safe too.
+    def build_bloom(tmp_dir: str) -> None:
+        os.makedirs(tmp_dir)
+        Path(tmp_dir, "bitmap.bin").write_bytes(bloom_gram_filter(benchmark, text_col, n))
+        Path(tmp_dir, "_SUCCESS").touch()
+
+    def build_grams(tmp_dir: str) -> None:
+        exploded(benchmark).select("gram").distinct().write.mode("overwrite").parquet(tmp_dir)
+
     if use_bloom:
-        if not os.path.exists(os.path.join(bloom_dir, "_SUCCESS")):
-            import shutil
+        _publish_once(bloom_dir, build_bloom)
+    else:
+        _publish_once(grams_dir, build_grams)
 
-            from ..functions.dedup import bloom_gram_filter
-
-            bmp = bloom_gram_filter(benchmark, text_col, n)
-            tmp_dir = bloom_dir + "._tmp"
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            os.makedirs(tmp_dir)
-            with open(os.path.join(tmp_dir, "bitmap.bin"), "wb") as fh:
-                fh.write(bmp)
-            with open(os.path.join(tmp_dir, "_SUCCESS"), "w"):
-                pass
-            shutil.rmtree(bloom_dir, ignore_errors=True)
-            os.replace(tmp_dir, bloom_dir)
-    elif not os.path.exists(os.path.join(grams_dir, "_SUCCESS")):
-        import shutil
-
-        tmp_dir = grams_dir + "._tmp"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        exploded(benchmark).select("gram").distinct().write.mode("overwrite").parquet(
-            tmp_dir
-        )
-        shutil.rmtree(grams_dir, ignore_errors=True)
-        os.replace(tmp_dir, grams_dir)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
         batch_df = batch_df.select(id_col, text_col).localCheckpoint()
         if use_bloom:
-            from ..functions.dedup import bloom_probe_stats
-
             with open(os.path.join(bloom_dir, "bitmap.bin"), "rb") as fh:
                 bmp = fh.read()
             hit_ids = (
@@ -872,17 +849,10 @@ def run_decontaminate_stream(
                 .distinct()
                 .localCheckpoint()
             )
-        write_batch(hit_ids, hits_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_hits", batch_id)
-        write_batch(batch_df.join(hit_ids, id_col, "left_anti"), clean_dir, batch_id)
+        g.write("hits", hit_ids)
+        g.write("clean", batch_df.join(hit_ids, id_col, "left_anti"))
 
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook)
 
 
 def run_media_dedup_stream(
@@ -919,17 +889,11 @@ def run_media_dedup_stream(
 
     The index probe catches cross-batch duplicates (within-batch dups of
     a single micro-batch are the batch job ``image_near_duplicates``'s
-    job).  Replay-idempotent: all three appends are batch_id-keyed
-    ``write_batch`` overwrites and the index read sees only complete
-    older batches (replay contract, module docstring).  Returns the
-    started StreamingQuery."""
+    job).  Returns the started StreamingQuery."""
     from pyspark.sql import functions as F
 
     from ..functions.multimodal import audio_fingerprints, perceptual_hashes
 
-    idx_dir = os.path.join(work_dir, "phash_index")
-    corpus_dir = os.path.join(work_dir, "corpus")
-    hits_dir = os.path.join(work_dir, "hits")
     band_bits, nbands = 8, 8
     mask = (1 << band_bits) - 1
 
@@ -953,7 +917,7 @@ def run_media_dedup_stream(
             ).alias("bb"),
         ).select(id_alias, "kind", hash_alias, "bb.band", "bb.chunk")
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
         batch_df = batch_df.localCheckpoint()
         img_h = perceptual_hashes(batch_df, id_col).select(
             id_col, F.lit("img").alias("kind"), F.col("dhash").alias("phash")
@@ -962,7 +926,7 @@ def run_media_dedup_stream(
             id_col, F.lit("aud").alias("kind"), F.col("ahash64").alias("phash")
         )
         h = img_h.unionByName(aud_h).localCheckpoint()
-        idx = read_batches(spark, idx_dir, before=batch_id)
+        idx = g.prior("phash_index")
         if idx is not None:
             hits = (
                 bands(h, "id_a", "phash_a")
@@ -979,25 +943,16 @@ def run_media_dedup_stream(
                 .distinct()
                 .localCheckpoint()
             )
-            write_batch(hits, hits_dir, batch_id)
-            if fault_hook:
-                fault_hook("after_hits", batch_id)
+            g.write("hits", hits)
             dup_ids = hits.select(F.col("id_a").alias(id_col)).distinct()
             kept = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint()
             kept_h = h.join(dup_ids, id_col, "left_anti")
         else:
             kept, kept_h = batch_df, h
-        write_batch(kept, corpus_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_corpus", batch_id)
-        write_batch(bands(kept_h, "idx_id", "idx_phash"), idx_dir, batch_id)
+        g.write("corpus", kept)
+        g.write("phash_index", bands(kept_h, "idx_id", "idx_phash"))
 
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook, compact_every)
 
 
 def run_ann_index_stream(
@@ -1032,11 +987,6 @@ def run_ann_index_stream(
       ``ivfpq_probe`` between appends (the ``centroid_id`` filter still
       prunes at the nested partition level).
 
-    Replay-idempotent: every batch's codes live under their own
-    ``batch_id=N`` partition written with ``mode("overwrite")``, so a
-    crashed fold-in replays into the same directory instead of appending
-    duplicate code rows (replay contract, module docstring).
-
     Model staleness is the standard production trade: centroids trained
     on crawl 1 quantize later crawls slightly worse until an offline
     retrain cadence job rebuilds the index — the FAISS deployment shape.
@@ -1050,35 +1000,26 @@ def run_ann_index_stream(
         ivfpq_save,
     )
 
-    codes_root = os.path.join(index_dir, "codes")
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
         if batch_df.isEmpty():
             return
         batch_df = batch_df.select(id_col, vec_col).localCheckpoint()
-        if not os.path.exists(os.path.join(index_dir, "params.json")):
+        trained = os.path.exists(os.path.join(index_dir, "params.json"))
+        if trained:
+            idx = ivfpq_load(spark, index_dir)
+            assigned = ivf_assign(batch_df, idx.cents_df, id_col, vec_col)
+            batch_codes = _pq_encode(assigned, idx.cent, idx.cb, id_col, vec_col)
+        else:
             idx = ivfpq_build(
                 batch_df, n_centroids=n_centroids, m=m, codes=codes, seed=seed,
                 id_col=id_col, vec_col=vec_col,
             )
-            write_batch(idx.codes, codes_root, batch_id, partition_by=("centroid_id",))
-            if fault_hook:
-                fault_hook("after_codes", batch_id)
+            batch_codes = idx.codes
+        g.write("codes", batch_codes, partition_by=("centroid_id",))
+        if not trained:
             ivfpq_save(idx, index_dir, include_codes=False)
-            return
-        idx = ivfpq_load(spark, index_dir)
-        assigned = ivf_assign(batch_df, idx.cents_df, id_col, vec_col)
-        new_codes = _pq_encode(assigned, idx.cent, idx.cb, id_col, vec_col)
-        write_batch(new_codes, codes_root, batch_id, partition_by=("centroid_id",))
-        if fault_hook:
-            fault_hook("after_codes", batch_id)
 
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_gate(spark, source, index_dir, checkpoint_dir, step, fault_hook)
 
 
 # ---------------------------------------------------------------------------
@@ -1128,7 +1069,6 @@ def _train_curation_version(
     (functions/langid.py) — integer count tables, so the persisted model
     is byte-stable across restarts.  Returns the new version name."""
     import json
-    import shutil
 
     from ..functions.classifier import irls_train, text_feature_frame
     from ..functions.curation import dsir_lambda_table, hashed_lambda_table
@@ -1230,9 +1170,7 @@ def run_curation_stream(
 
     A doc is accepted when ``score_ppm ≥ min_score_ppm`` AND
     ``dsir_ppm ≥ min_dsir_ppm``; both scores are written either way, so
-    downstream can re-threshold rejected docs without re-scoring.  The
-    accept/reject writes are batch_id-keyed ``write_batch`` overwrites —
-    replay-idempotent per the module docstring's contract.
+    downstream can re-threshold rejected docs without re-scoring.
 
     ``dsir_variant``: ``"vocab"`` persists the learned-bigram λ table;
     ``"hashed"`` persists the fixed 1024-bucket λ (the published DSIR
@@ -1268,16 +1206,13 @@ def run_curation_stream(
     from ..functions.langid import collect_model, langid_predict
     from ..functions.text import gopher_rules
 
-    accept_dir = os.path.join(work_dir, "accept")
-    reject_dir = os.path.join(work_dir, "reject")
-
     if _current_version(work_dir) is None:
         _train_curation_version(
             spark, work_dir, reference, target, text_col, id_col, dsir_variant,
             langid_label,
         )
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
         batch_df = batch_df.select(id_col, text_col).localCheckpoint()
         # resolve CURRENT once per batch: one consistent (λ, β) pair even
         # if a refresh lands mid-batch
@@ -1287,14 +1222,16 @@ def run_curation_stream(
             beta = json.load(f)
         feat = text_feature_frame(batch_df, text_col, id_col)
         quality = classifier_scores(feat, beta, id_col=id_col)
-        if dsir_variant == "hashed":
-            dsir = hashed_dsir_score(batch_df, lam, text_col, id_col)
-        else:
-            dsir = dsir_score(batch_df, lam, text_col, id_col)
+        dsir_fn = hashed_dsir_score if dsir_variant == "hashed" else dsir_score
+        dsir = dsir_fn(batch_df, lam, text_col, id_col)
         scored = batch_df.join(quality, id_col).join(
             dsir.select(id_col, "dsir_ppm"), id_col
         )
-        gopher_ok = F.lit(True)
+        # (name, passes) in gate order: langid, gopher, quality, dsir
+        stages = [
+            ("quality", F.col("score_ppm") >= min_score_ppm),
+            ("dsir", F.col("dsir_ppm") >= min_dsir_ppm),
+        ]
         if gopher:
             scored = scored.join(
                 gopher_rules(batch_df, text_col, id_col).select(
@@ -1302,8 +1239,7 @@ def run_curation_stream(
                 ),
                 id_col,
             )
-            gopher_ok = F.col("n_rules_failed") == 0
-        lang_ok = F.lit(True)
+            stages.insert(0, ("gopher", F.col("n_rules_failed") == 0))
         if langid_label is not None and os.path.isdir(
             os.path.join(vdir, "langid_model")
         ):
@@ -1318,40 +1254,20 @@ def run_curation_stream(
             lang_ok = F.col("lang_pred").isin(list(langid_accept)) & (
                 F.col("margin_ppm") >= langid_min_margin_ppm
             )
+            stages.insert(0, ("langid", lang_ok))
+        if len(stages) > 2:
+            # langid or gopher armed: name the first stage a row failed
+            # (NULL when it passed them all)
             scored = scored.withColumn(
                 "first_reject",
-                F.when(~lang_ok, F.lit("langid"))
-                .when(~gopher_ok, F.lit("gopher"))
-                .when(F.col("score_ppm") < min_score_ppm, F.lit("quality"))
-                .when(F.col("dsir_ppm") < min_dsir_ppm, F.lit("dsir"))
-                .otherwise(F.lit(None).cast("string")),
-            )
-        elif gopher:
-            scored = scored.withColumn(
-                "first_reject",
-                F.when(~gopher_ok, F.lit("gopher"))
-                .when(F.col("score_ppm") < min_score_ppm, F.lit("quality"))
-                .when(F.col("dsir_ppm") < min_dsir_ppm, F.lit("dsir"))
-                .otherwise(F.lit(None).cast("string")),
+                F.coalesce(*[F.when(~passes, F.lit(name)) for name, passes in stages]),
             )
         scored = scored.localCheckpoint()
-        ok = (
-            lang_ok
-            & gopher_ok
-            & (F.col("score_ppm") >= min_score_ppm)
-            & (F.col("dsir_ppm") >= min_dsir_ppm)
-        )
-        write_batch(scored.where(ok), accept_dir, batch_id)
-        if fault_hook:
-            fault_hook("after_accept", batch_id)
-        write_batch(scored.where(~ok), reject_dir, batch_id)
+        ok = reduce(operator.and_, [passes for _, passes in stages])
+        g.write("accept", scored.where(ok))
+        g.write("reject", scored.where(~ok))
 
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook)
 
 
 def run_cc_stream(
@@ -1388,7 +1304,7 @@ def run_cc_stream(
 
     labels_tbl = VersionedTable(os.path.join(work_dir, "cc_labels"))
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, g: _GateBatch) -> None:
         edges = (
             batch_df.select(
                 F.col(src_col).cast("bigint").alias("src"),
@@ -1406,18 +1322,12 @@ def run_cc_stream(
         # the raw edge stream also lands in a replay-idempotent batch store
         # so rank maintenance (pagerank_refresh) can recompute over the
         # accumulated graph on its own cadence
-        write_batch(edges, os.path.join(work_dir, "edges"), batch_id)
+        g.write("edges", edges)
         folded = cc_fold_in(labels, edges).localCheckpoint()
-        if fault_hook:
-            fault_hook("before_commit", batch_id)
+        g.fault("before_commit")
         labels_tbl.commit(folded)
 
-    return (
-        source.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_gate(spark, source, work_dir, checkpoint_dir, step, fault_hook)
 
 
 def pagerank_refresh(
