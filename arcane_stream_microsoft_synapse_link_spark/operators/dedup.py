@@ -17,8 +17,10 @@ there is no skew concern; AQE handles stragglers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..exprmemo import schema_memo
 
 
 def latest_by_version(
@@ -29,21 +31,26 @@ def latest_by_version(
 ) -> DataFrame:
     has_version = version_col in df.columns
     has_fallback = bool(fallback_version_col) and fallback_version_col in df.columns
-    order = []
-    if has_version and has_fallback:
-        order.append(F.desc_nulls_last(F.coalesce(F.col(version_col), F.col(fallback_version_col))))
-        order.append(F.desc_nulls_last(fallback_version_col))
-    elif has_version:
-        order.append(F.desc_nulls_last(version_col))
-    elif has_fallback:
-        order.append(F.desc_nulls_last(fallback_version_col))
-    else:
+    if not (has_version or has_fallback):
         # no version column at all: keep the batch as-is so the merge's
         # documented last-write-wins fallback (merge.py) decides
         return df
-    w = Window.partitionBy(key).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
+    rank, first = _latest_row(
+        key, version_col if has_version else None, fallback_version_col if has_fallback else None
     )
+    return df.withColumn("__rn", rank).where(first).drop("__rn")
+
+
+@schema_memo
+def _latest_row(key: str, version_col: str | None, fallback: str | None) -> tuple[Column, Column]:
+    """The per-key rank by version (newest first) and its "is the newest"
+    filter, memoized per (key, version columns present) like the merge's
+    Columns (see ``exprmemo``)."""
+    order = []
+    if version_col and fallback:
+        order.append(F.desc_nulls_last(F.coalesce(F.col(version_col), F.col(fallback))))
+        order.append(F.desc_nulls_last(fallback))
+    else:
+        order.append(F.desc_nulls_last(version_col or fallback))
+    w = Window.partitionBy(key).orderBy(*order)
+    return F.row_number().over(w), F.col("__rn") == 1

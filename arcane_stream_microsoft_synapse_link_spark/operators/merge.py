@@ -40,22 +40,13 @@ inserted rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..exprmemo import columns, schema_memo
 from .dedup import latest_by_version
-
-
-def _version_expr(df: DataFrame, version_col: str, fallback: str = "sysrowversion") -> Column | None:
-    have_v = version_col in df.columns
-    have_f = fallback in df.columns
-    if have_v and have_f:
-        return F.coalesce(F.col(version_col), F.col(fallback))
-    if have_v:
-        return F.col(version_col)
-    if have_f:
-        return F.col(fallback)
-    return None
 
 
 def _evolve(target: DataFrame, staged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -79,7 +70,59 @@ def _evolve(target: DataFrame, staged: DataFrame) -> tuple[DataFrame, DataFrame]
     for name, dtype in t_cols.items():
         if name not in s_cols:
             staged = staged.withColumn(name, F.lit(None).cast(dtype))
-    return target, staged.select(*target.columns)
+    return target, staged.select(*columns(tuple(target.columns)))
+
+
+class _MergeColumns(NamedTuple):
+    key: Column
+    not_delete: Column
+    # the version guard over staged ⟕ target(key, version): the target
+    # side's select list, the join condition and "new or newer"; None
+    # without a target or without version columns
+    target_versions: tuple[Column, ...] | None
+    join_on: Column | None
+    newer: Column | None
+    # the observation's aggregates over the deduplicated staged rows
+    effect: tuple[Column, ...]
+
+
+@schema_memo
+def _merge_columns(
+    key: str, version_cols: tuple[str, ...], is_delete_col: str | None, has_target: bool
+) -> _MergeColumns:
+    """Every Column ``cdc_merge`` builds, for one merge shape: the key,
+    the version columns present (coalesced in this order), the delete
+    flag column if present, and whether there is a target.  Memoized
+    (keyed by that shape, bounded, pickled empty — see ``exprmemo``), so a
+    stream whose schema holds still builds them once."""
+    is_delete = (
+        F.coalesce(F.col(is_delete_col), F.lit(False)) if is_delete_col else F.lit(False)
+    )
+    guard = join_on = newer = None
+    if not has_target:
+        hit, takes_effect = F.lit(False), F.lit(True)
+    elif version_cols:
+        ver = F.col(version_cols[0]) if len(version_cols) == 1 else F.coalesce(
+            *[F.col(c) for c in version_cols]
+        )
+        guard = (F.col(key).alias("__k"), ver.alias("__tgt_v"), F.lit(True).alias("__hit"))
+        join_on = F.col(key) == F.col("__k")
+        newer = F.col("__tgt_v").isNull() | (ver > F.col("__tgt_v"))
+        hit, takes_effect = F.col("__hit").isNotNull(), newer
+    else:
+        # no version columns → last-write-wins
+        hit, takes_effect = F.lit(True), F.lit(True)
+    # a null version compares null: the guard filter drops the row, so it
+    # counts as a no-op
+    took = F.coalesce(takes_effect, F.lit(False))
+    upsert = took & ~is_delete
+    effect = (
+        F.count(F.when(upsert & ~hit, 1)).alias("inserts"),
+        F.count(F.when(upsert & hit, 1)).alias("updates"),
+        F.count(F.when(took & is_delete & hit, 1)).alias("deletes"),
+        F.count(F.when(~took | (is_delete & ~hit), 1)).alias("noops"),
+    )
+    return _MergeColumns(F.col(key), ~is_delete, guard, join_on, newer, effect)
 
 
 def cdc_merge(
@@ -99,79 +142,60 @@ def cdc_merge(
     schema migration between stage and target is disabled, so a column-set
     mismatch is an error instead of an auto-ADD/null-fill.
 
-    ``observation``: filled, when the returned plan first runs, with
-    ``rows`` — the staged rows as read — and the rows that took effect:
+    ``observation``: filled, when the returned plan first runs, with what
+    the deduplicated staged rows did after the version guard: the
     ``inserts``, ``updates`` and ``deletes`` (of a key the target held)
-    after dedup and the version guard.  It rides on that plan
-    (``DataFrame.observe``), so it starts no Spark job.  Without version
-    columns every staged row takes effect (last write wins) and counts as
-    an update when the target is not empty."""
-    if observation is not None:
-        # the observation sees one row per key; each carries its key's
-        # raw row count so ``rows`` still counts the batch as read.  The
-        # window shares the dedup's key partitioning: no extra shuffle.
-        per_key = dedup_staged and _version_expr(staged, version_col) is not None
-        n = F.count(F.lit(1)).over(Window.partitionBy(key)) if per_key else F.lit(1)
-        staged = staged.withColumn("__n", n)
+    that took effect, and the ``noops`` that did not — stale re-uploads
+    and deletes of absent keys.  The four add up to the deduplicated
+    rows.  It rides on that plan (``DataFrame.observe``), so it starts no
+    Spark job.  Without version columns every staged row takes effect
+    (last write wins) and counts as an update when the target is not
+    empty.
+
+    The guard, the delete flag and the observation's aggregates are built
+    once per merge shape (:func:`_merge_columns`: keyed by the key, the
+    version and delete columns present and whether a target exists;
+    bounded; pickled empty)."""
     if dedup_staged:
         staged = latest_by_version(staged, key=key, version_col=version_col)
 
-    is_delete = (
-        F.coalesce(F.col(is_delete_col), F.lit(False))
-        if is_delete_col in staged.columns
-        else F.lit(False)
+    if target is not None:
+        if not allow_schema_evolution:
+            t_names = {f.name for f in target.schema.fields if not f.name.startswith("__")}
+            s_names = {f.name for f in staged.schema.fields if not f.name.startswith("__")}
+            if t_names != s_names:
+                raise ValueError(
+                    "isUnifiedSchema: staged/target schema mismatch "
+                    f"(staging-only: {sorted(s_names - t_names)}, "
+                    f"target-only: {sorted(t_names - s_names)})"
+                )
+        target, staged = _evolve(target, staged)
+    # after _evolve both sides hold the same columns
+    names = (target if target is not None else staged).columns
+    c = _merge_columns(
+        key,
+        tuple(v for v in (version_col, "sysrowversion") if v in names),
+        is_delete_col if is_delete_col in names else None,
+        target is not None,
     )
 
-    def observed(df: DataFrame, hit: Column, takes_effect: Column) -> DataFrame:
+    def observed(df: DataFrame) -> DataFrame:
         # observed BEFORE the guard filter, on the branch that feeds the
         # union: AQE drops plan branches it proves empty (the broadcast
         # of touched keys, say), and an observation that lived only there
         # would come back empty
-        if observation is None:
-            return df
-        upsert = takes_effect & ~is_delete
-        return df.observe(
-            observation,
-            F.coalesce(F.sum("__n"), F.lit(0)).alias("rows"),
-            F.count(F.when(upsert & ~hit, 1)).alias("inserts"),
-            F.count(F.when(upsert & hit, 1)).alias("updates"),
-            F.count(F.when(takes_effect & is_delete & hit, 1)).alias("deletes"),
-        ).drop("__n")
+        return df if observation is None else df.observe(observation, *c.effect)
 
     if target is None:
-        return observed(staged, F.lit(False), F.lit(True)).where(~is_delete)
+        return observed(staged).where(c.not_delete)
 
-    if not allow_schema_evolution:
-        t_names = {f.name for f in target.schema.fields if not f.name.startswith("__")}
-        s_names = {f.name for f in staged.schema.fields if not f.name.startswith("__")}
-        if t_names != s_names:
-            raise ValueError(
-                "isUnifiedSchema: staged/target schema mismatch "
-                f"(staging-only: {sorted(s_names - t_names)}, "
-                f"target-only: {sorted(t_names - s_names)})"
-            )
-    target, staged = _evolve(target, staged)
-    if observation is not None:
-        target = target.drop("__n")  # _evolve null-filled it: staged-only
-
-    s_ver = _version_expr(staged, version_col)
-    t_ver = _version_expr(target, version_col)
-    if s_ver is not None and t_ver is not None:
-        tgt_versions = target.select(
-            F.col(key).alias("__k"), t_ver.alias("__tgt_v"), F.lit(True).alias("__hit")
-        )
-        newer = F.col("__tgt_v").isNull() | (s_ver > F.col("__tgt_v"))
-        joined = staged.join(tgt_versions, staged[key] == tgt_versions["__k"], "left")
-        effective = (
-            observed(joined, F.col("__hit").isNotNull(), newer)
-            .where(newer)
-            .drop("__k", "__tgt_v", "__hit")
-        )
+    if c.target_versions is not None:
+        joined = staged.join(target.select(*c.target_versions), c.join_on, "left")
+        effective = observed(joined).where(c.newer).drop("__k", "__tgt_v", "__hit")
     else:
-        # no version columns → last-write-wins
-        effective = observed(staged, F.lit(True), F.lit(True))
+        effective = observed(staged)
 
-    upserts = effective.where(~is_delete)
-    touched_keys = effective.select(key)
+    upserts = effective.where(c.not_delete)
+    touched_keys = effective.select(c.key)
     survivors = target.join(touched_keys, on=key, how="left_anti")
     return survivors.unionByName(upserts)

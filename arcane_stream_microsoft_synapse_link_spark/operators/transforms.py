@@ -12,6 +12,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..exprmemo import schema_memo
+
 # Fields that survive any include/exclude rule (reference default:
 # .helm/templates/crd-microsoft-synapse.yaml:410-418).
 ESSENTIAL_FIELDS = ("id", "versionnumber", "isdelete", "arcane_merge_key")
@@ -39,7 +41,12 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
 def with_merge_key(df: DataFrame, key_column: str = "Id") -> DataFrame:
     """Synthesize ``arcane_merge_key`` from the entity key (B4 [inferred]):
     canonical lowercase of the guid key."""
-    return df.withColumn("arcane_merge_key", F.lower(F.col(key_column)))
+    return df.withColumn("arcane_merge_key", _merge_key_expr(key_column))
+
+
+@schema_memo
+def _merge_key_expr(key_column: str):
+    return F.lower(F.col(key_column))
 
 
 def select_fields(

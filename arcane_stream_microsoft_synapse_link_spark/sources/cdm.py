@@ -15,6 +15,11 @@ or not the hosting session runs in ANSI mode (Spark 4 default: ANSI on), and
 so the sparse delete rows (key + IsDelete + sentinel timestamp, everything
 else empty — ``SynapseMetadata.scala:21-22``) cast to nulls instead of
 failing (SURVEY.md §7 watch-list items 1-2).
+
+The typed projection and the line-parse columns are built once per
+entity schema (``exprmemo.schema_memo``: keyed by the schema's attributes,
+bounded, pickled empty — the readStream source pickles this module by
+value), so a tick's read costs no Column construction after the first.
 """
 
 from __future__ import annotations
@@ -26,6 +31,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..exprmemo import schema_memo
 
 
 @dataclass(frozen=True)
@@ -144,16 +151,21 @@ def apply_schema(df: DataFrame, entity: CdmEntity, *keep: str) -> DataFrame:
     """Cast an all-string CSV DataFrame to the CDM-declared types (B3),
     carrying the ``keep`` columns through untouched.  The one CDM value
     parser: the batch reads and the readStream path both type here."""
-    return df.select(
-        *[cast_attribute(F.col(a.name), a).alias(a.name) for a in entity.attributes], *keep
+    return df.select(*_typed_columns(tuple(entity.attributes), keep))
+
+
+@schema_memo
+def _typed_columns(
+    attributes: tuple[CdmAttribute, ...], keep: tuple[str, ...]
+) -> tuple[Column, ...]:
+    """``apply_schema``'s select list, memoized per attribute tuple."""
+    return (
+        *[cast_attribute(F.col(a.name), a).alias(a.name) for a in attributes],
+        *[F.col(k) for k in keep],
     )
 
 
 _CSV_OPTIONS = {"quote": '"', "escape": '"', "mode": "PERMISSIVE"}
-
-
-def _raw_schema_ddl(entity: CdmEntity) -> str:
-    return ", ".join(f"`{a.name}` STRING" for a in entity.attributes)
 
 
 def paths_are_line_splittable(spark: SparkSession, paths: list[str] | str) -> bool:
@@ -193,11 +205,21 @@ def paths_are_line_splittable(spark: SparkSession, paths: list[str] | str) -> bo
 def _from_csv_lines(spark: SparkSession, paths: list[str] | str, entity: CdmEntity) -> DataFrame:
     """Byte-range-splittable CSV read: ``from_csv`` over ``spark.read.text``
     lines.  Only correct when no record spans lines."""
-    lines = spark.read.text(paths).where(F.col("value") != "")
-    parsed = lines.select(
-        F.from_csv("value", _raw_schema_ddl(entity), _CSV_OPTIONS).alias("r")
-    ).select("r.*")
+    non_empty, record, fields = _line_parse_columns(tuple(entity.attributes))
+    parsed = spark.read.text(paths).where(non_empty).select(record).select(fields)
     return apply_schema(parsed, entity)
+
+
+@schema_memo
+def _line_parse_columns(attributes: tuple[CdmAttribute, ...]) -> tuple[Column, Column, Column]:
+    """``_from_csv_lines``' line filter, its ``from_csv`` record and the
+    record's field expansion, memoized per attribute tuple."""
+    ddl = ", ".join(f"`{a.name}` STRING" for a in attributes)
+    return (
+        F.col("value") != "",
+        F.from_csv("value", ddl, _CSV_OPTIONS).alias("r"),
+        F.col("r.*"),
+    )
 
 
 def _read_line_splittable(

@@ -336,7 +336,8 @@ def register(spark) -> None:
     """Register the source on a session (idempotent). Call before
     ``readStream.format("synapse_link")``.
 
-    The source graph (this module + synapse + cdm) is marked for
+    The source graph (this module + synapse + cdm + the exprmemo memo
+    that cdm's Column builders use) is marked for
     cloudpickle BY-VALUE serialization before registration: Spark's
     streaming-source PLANNER worker (python_streaming_source_runner)
     does not receive the session's python includes the way task workers
@@ -346,17 +347,20 @@ def register(spark) -> None:
     and function definitions in the pickled command itself — no import
     needed at unpickle time.  Executor task workers still get the
     shipped zip (session.tune → addPyFile), which covers the partition
-    pickles the planner re-serializes by reference."""
+    pickles the planner re-serializes by reference.  A by-value function
+    carries the memo its code reaches; the memo pickles empty, and its
+    class comes along by value."""
     from ..session import tune
 
     tune(spark)  # confs + ship package zip so executors can unpickle us
     try:
         from pyspark import cloudpickle
 
+        from .. import exprmemo as _exprmemo
         from . import cdm as _cdm
         from . import synapse as _synapse
 
-        for m in (sys.modules[__name__], _synapse, _cdm):
+        for m in (sys.modules[__name__], _synapse, _cdm, _exprmemo):
             cloudpickle.register_pickle_by_value(m)
     except (ImportError, AttributeError) as exc:
         # Only the documented fallback (older cloudpickle without the

@@ -35,6 +35,9 @@ class BatchMetric:
     inserts: int | None = None
     updates: int | None = None
     deletes: int | None = None
+    # deduplicated staged rows that took no effect: stale re-uploads and
+    # deletes of absent keys
+    noops: int | None = None
 
 
 class StatsdPublisher:
@@ -124,10 +127,12 @@ class MetricsRecorder:
         inserts: int | None = None,
         updates: int | None = None,
         deletes: int | None = None,
+        noops: int | None = None,
     ) -> BatchMetric:
         """One merged batch: ``rows`` read, and — when the merge outcome
         is known — the ``inserts``, ``updates`` and ``deletes`` that took
-        effect (``rows.merged`` is their sum)."""
+        effect (``rows.merged`` is their sum) and the ``noops`` that did
+        not."""
         outcome = (inserts, updates, deletes)
         m = BatchMetric(
             batch_folder=batch_folder,
@@ -140,6 +145,7 @@ class MetricsRecorder:
             inserts=inserts,
             updates=updates,
             deletes=deletes,
+            noops=noops,
         )
         self.metrics.append(m)
         if self.path:

@@ -24,8 +24,10 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
+from ..exprmemo import schema_memo
 from ..operators.dedup import latest_by_version
 from ..operators.merge import cdc_merge
 from ..operators.retry import RetryPolicy, with_retry
@@ -136,8 +138,27 @@ class RunnerStats:
     folders_seen: list[str] = field(default_factory=list)
 
 
+@schema_memo
+def _has_merge_key() -> Column:
+    return F.col("arcane_merge_key").isNotNull()
+
+
+@schema_memo
+def _pin_metrics(bucketed: bool) -> tuple[Column, ...]:
+    """What the tick's pin observes: the staged rows as read and, on a
+    bucketed table, the set of buckets they touch (at most
+    ``bucket_count`` values)."""
+    rows = F.count(F.lit(1)).alias("rows")
+    return (rows, F.collect_set("__bucket").alias("buckets")) if bucketed else (rows,)
+
+
 class StreamRunner:
     def __init__(self, spark: SparkSession, spec: StreamSpec):
+        # maintenance runs every N merged batches: N <= 0 would divide by
+        # zero after the first tick's commit and watermark
+        for name in ("optimize_batch_threshold", "analyze_batch_threshold"):
+            if getattr(spec, name) <= 0:
+                raise ValueError(f"StreamSpec.{name} must be > 0, got {getattr(spec, name)!r}")
         self.spark = spark
         self.spec = spec
         source_io = None
@@ -246,8 +267,6 @@ class StreamRunner:
 
     # ---- shared transform chain (B2→B1→B4) -------------------------------
     def _prepare(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         df = select_fields(
             normalize_column_names(df),
             self.spec.field_selection_mode,
@@ -257,7 +276,7 @@ class StreamRunner:
         df = with_merge_key(df, self.spec.key_column)
         # rows without a merge key cannot participate in MERGE; dropping
         # them keeps null-key garbage out of the dedup window
-        return df.where(F.col("arcane_merge_key").isNotNull())
+        return df.where(_has_merge_key())
 
     def _target(self) -> DataFrame | None:
         return self.table.read(self.spark) if self.table.exists() else None
@@ -266,8 +285,6 @@ class StreamRunner:
         """Filter delete rows before an Overwrite finalize; entities
         without an IsDelete column (cdc_merge also guards for its
         absence) pass through unchanged."""
-        from pyspark.sql import functions as F
-
         if self.spec.is_delete_column not in df.columns:
             return df
         return df.where(~F.coalesce(F.col(self.spec.is_delete_column), F.lit(False)))
@@ -275,14 +292,13 @@ class StreamRunner:
     def _merge_folder_batch(
         self, df: DataFrame, up_to_folder: str, is_backfill: bool = False
     ) -> None:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
         from ..session import release_checkpoint
 
         t0 = time.time()
         metrics_on = bool(self.spec.metrics_path or self.spec.statsd_address)
+        bucketed = bool(self.table.bucket_count)
         pinned: list[DataFrame] = []
+        pin_observed: list[Observation] = []
         observed: list[Observation] = []
 
         def merge_and_commit() -> None:
@@ -290,30 +306,32 @@ class StreamRunner:
             # the version-guarded merge is idempotent (re-merge is a no-op)
             if not pinned:
                 # the change folder is parsed once per tick, in this pin's
-                # own job: the touched-bucket list, both merge branches and
-                # the metrics all read it
-                pinned.append(self._prepare(df).localCheckpoint())
+                # own job, which also observes the rows read and the
+                # buckets they touch; both merge branches read the pin
+                staged = self._prepare(df)
+                if bucketed:
+                    staged = staged.withColumn("__bucket", self.table.bucket_expr())
+                pin_observed[:] = [Observation()]
+                staged = staged.observe(pin_observed[0], *_pin_metrics(bucketed))
+                pinned.append(staged.localCheckpoint())
             staged = pinned[0]
             # metrics ride on the commit's own plan; an Observation fills
             # once, so each attempt gets a fresh one
             observed[:] = [Observation()] if metrics_on else []
-            src, target = staged, self._target()
+            target = self._target()
             touched = None  # None: rewrite the whole table
-            if self.table.bucket_count:
-                src = src.withColumn("__bucket", self.table.bucket_expr())
-                # a column type change rewrites every bucket: hard-linked
-                # ones would keep the old type
-                if target is not None and not type_changes(target.schema, staged.schema):
-                    # incremental path: merge into ONLY the buckets the
-                    # batch touches (partition-pruned target read);
-                    # untouched buckets are hard-linked forward by commit —
-                    # at 100 TB the merge cost follows the change set, not
-                    # the table
-                    touched = [r[0] for r in src.select("__bucket").distinct().collect()]
-                    target = target.where(F.col("__bucket").isin(touched))
+            # a column type change rewrites every bucket: hard-linked ones
+            # would keep the old type
+            if bucketed and target is not None and not type_changes(target.schema, staged.schema):
+                # incremental path: merge into ONLY the buckets the batch
+                # touches (partition-pruned target read); untouched buckets
+                # are hard-linked forward by commit — at 100 TB the merge
+                # cost follows the change set, not the table
+                touched = sorted(pin_observed[0].get["buckets"])
+                target = target.where(F.col("__bucket").isin(touched))
             merged = cdc_merge(
                 target,
-                src,
+                staged,
                 version_col=self.spec.version_column,
                 is_delete_col=self.spec.is_delete_column,
                 allow_schema_evolution=not self.spec.is_unified_schema,
@@ -332,11 +350,12 @@ class StreamRunner:
                 effect = observed[0].get
                 self.metrics.record(
                     up_to_folder,
-                    effect["rows"],
+                    pin_observed[0].get["rows"],
                     time.time() - t0,
                     inserts=effect["inserts"],
                     updates=effect["updates"],
                     deletes=effect["deletes"],
+                    noops=effect["noops"],
                 )
         finally:
             for pin in pinned:

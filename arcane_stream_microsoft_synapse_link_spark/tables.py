@@ -41,10 +41,13 @@ import contextlib
 import json
 import os
 import shutil
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from .exprmemo import schema_memo
 
 SNAPSHOT_FORMAT = "arcane-versioned-table"
 SNAPSHOT_FORMAT_VERSION = 1
@@ -240,7 +243,10 @@ class VersionedTable:
         back to the full-table join.  Both sides read with their snapshot
         manifest's schema (no footer-merge job), and rows are classified
         on per-side presence flags, so a reader that only counts
-        ``_change_type`` scans just the key and version columns.
+        ``_change_type`` scans just the key and version columns.  The
+        projections, classifier and row select are built once per schema
+        pair (:func:`_change_feed_columns`); a read builds only its scans
+        and the two version literals.
         """
         key_col = key_col or self.bucket_key
         head = self.current_version()
@@ -273,14 +279,7 @@ class VersionedTable:
                     for t in sorted(tops)
                     if any(rel.startswith(t + os.sep) for rel in names)
                 ]
-            if not dirs:
-                return None
-            df = self._scan(spark, version, dirs)
-            # __p_* / __bucket are derived layout, not table columns (a
-            # pruned read of bucket subdirs never surfaces them anyway)
-            return df.drop(
-                *[c for c in df.columns if c.startswith("__p_") or c == "__bucket"]
-            )
+            return self._scan(spark, version, dirs) if dirs else None
 
         old_df, new_df = side(from_version, oi), side(to_v, ni)
         meta = [F.lit(from_version).alias("_from_version"), F.lit(to_v).alias("_to_version")]
@@ -289,65 +288,20 @@ class VersionedTable:
             empty = empty.drop(*[c for c in empty.columns if c == "__bucket"])
             return empty.select(F.lit("insert").alias("_change_type"), *meta, "*")
 
-        # update detection over the columns BOTH snapshots share (a column
-        # added by schema migration reads null on hard-linked old files and
-        # must not flag every row as updated)
         base_old = old_df if old_df is not None else new_df.limit(0)
         base_new = new_df if new_df is not None else old_df.limit(0)
-        common = sorted(set(base_old.columns) & set(base_new.columns))
-        # emitted rows carry the UNION schema in one canonical order (new
-        # side's order first) with typed nulls for a side's missing columns
-        # — snapshots across a schema migration coalesce cleanly
-        union_cols = list(base_new.columns) + [
-            c for c in base_old.columns if c not in base_new.columns
-        ]
-        dtypes = {f.name: f.dataType for f in base_old.schema.fields}
-        dtypes.update({f.name: f.dataType for f in base_new.schema.fields})
-
-        def prep(df: DataFrame, side: str) -> DataFrame:
-            # flat columns plus a presence flag per side (``_o``/``_n``):
-            # the full outer join leaves the flag null on the side a key is
-            # missing from, so classification never touches the row values
-            # and a reader of ``_change_type`` alone scans only the key and
-            # fingerprint columns
-            fp = (
-                F.col(version_col)
-                if version_col
-                else F.xxhash64(*[F.col(c) for c in common])
-            )
-            vals = [
-                (F.col(c) if c in df.columns else F.lit(None).cast(dtypes[c])).alias(
-                    f"_{side}{i}"
-                )
-                for i, c in enumerate(union_cols)
-            ]
-            return df.select(
-                F.col(key_col).alias("_k"),
-                fp.alias(f"_{side}fp"),
-                F.lit(True).alias(f"_{side}"),
-                *vals,
-            )
-
-        j = prep(base_old, "o").join(prep(base_new, "n"), "_k", "full_outer")
-        ctype = (
-            F.when(F.col("_o").isNull(), F.lit("insert"))
-            .when(F.col("_n").isNull(), F.lit("delete"))
-            .when(F.col("_ofp") != F.col("_nfp"), F.lit("update"))
-        )
-        # insert/update rows carry the new side's values, deletes the old
-        row = [
-            F.when(F.col("_n"), F.col(f"_n{i}")).otherwise(F.col(f"_o{i}")).alias(c)
-            for i, c in enumerate(union_cols)
-        ]
+        c = _change_feed_columns(key_col, version_col, base_old.schema, base_new.schema)
+        j = base_old.select(*c.old).join(base_new.select(*c.new), "_k", "full_outer")
         return (
-            j.withColumn("_change_type", ctype)
-            .filter(F.col("_change_type").isNotNull())
-            .select("_change_type", *meta, *row)
+            j.withColumn("_change_type", c.classify)
+            .filter(c.changed)
+            .select(c.change_type, *meta, *c.values)
         )
 
-    def bucket_expr(self):
-        """Deterministic merge-key bucket (bucket(arcane_merge_key, N))."""
-        return F.pmod(F.xxhash64(self.bucket_key), F.lit(self.bucket_count)).cast("int")
+    def bucket_expr(self) -> Column:
+        """Deterministic merge-key bucket (bucket(arcane_merge_key, N)),
+        memoized per (key, N) like the ``changes()`` columns."""
+        return _bucket_expr(self.bucket_key, self.bucket_count)
 
     def commit(
         self,
@@ -758,6 +712,81 @@ class VersionedTable:
                     shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
                     removed.append(v)
         return sorted(removed)
+
+
+@schema_memo
+def _bucket_expr(key: str, count: int) -> Column:
+    return F.pmod(F.xxhash64(key), F.lit(count)).cast("int")
+
+
+def _is_layout(name: str) -> bool:
+    """``__bucket`` / ``__p_*``: derived layout, not table columns."""
+    return name == "__bucket" or name.startswith("__p_")
+
+
+class _ChangeFeedColumns(NamedTuple):
+    old: tuple[Column, ...]  # each side's flat projection
+    new: tuple[Column, ...]
+    classify: Column  # insert / delete / update / null (unchanged)
+    change_type: Column
+    changed: Column
+    values: tuple[Column, ...]  # the output row after the meta columns
+
+
+@schema_memo
+def _change_feed_columns(
+    key_col: str, version_col: str | None, old: StructType, new: StructType
+) -> _ChangeFeedColumns:
+    """The Columns of a ``changes()`` read over snapshots with schemas
+    ``old`` and ``new``.  Memoized per schema pair (keyed, bounded,
+    pickled empty — see ``exprmemo``), so a reader polling a table whose
+    schema holds still builds them once."""
+    old_names = [f.name for f in old.fields if not _is_layout(f.name)]
+    new_names = [f.name for f in new.fields if not _is_layout(f.name)]
+    # update detection over the columns BOTH snapshots share (a column
+    # added by schema migration reads null on hard-linked old files and
+    # must not flag every row as updated)
+    common = sorted(set(old_names) & set(new_names))
+    # emitted rows carry the UNION schema in one canonical order (new
+    # side's order first) with typed nulls for a side's missing columns
+    # — snapshots across a schema migration coalesce cleanly
+    union_cols = new_names + [c for c in old_names if c not in new_names]
+    dtypes = {f.name: f.dataType for f in old.fields}
+    dtypes.update({f.name: f.dataType for f in new.fields})
+    fp = F.col(version_col) if version_col else F.xxhash64(*[F.col(c) for c in common])
+
+    def prep(names: list[str], side: str) -> tuple[Column, ...]:
+        # flat columns plus a presence flag per side (``_o``/``_n``):
+        # the full outer join leaves the flag null on the side a key is
+        # missing from, so classification never touches the row values
+        # and a reader of ``_change_type`` alone scans only the key and
+        # fingerprint columns
+        vals = [
+            (F.col(c) if c in names else F.lit(None).cast(dtypes[c])).alias(f"_{side}{i}")
+            for i, c in enumerate(union_cols)
+        ]
+        return (
+            F.col(key_col).alias("_k"),
+            fp.alias(f"_{side}fp"),
+            F.lit(True).alias(f"_{side}"),
+            *vals,
+        )
+
+    classify = (
+        F.when(F.col("_o").isNull(), F.lit("insert"))
+        .when(F.col("_n").isNull(), F.lit("delete"))
+        .when(F.col("_ofp") != F.col("_nfp"), F.lit("update"))
+    )
+    change_type = F.col("_change_type")
+    # insert/update rows carry the new side's values, deletes the old
+    values = tuple(
+        F.when(F.col("_n"), F.col(f"_n{i}")).otherwise(F.col(f"_o{i}")).alias(c)
+        for i, c in enumerate(union_cols)
+    )
+    return _ChangeFeedColumns(
+        prep(old_names, "o"), prep(new_names, "n"), classify, change_type,
+        change_type.isNotNull(), values,
+    )
 
 
 def type_changes(old: StructType, new: StructType) -> list[str]:

@@ -179,6 +179,23 @@ def test_spec_from_json_reference_shape():
     assert spec.retry.on_message_contents == ("CONFLICT",)
 
 
+@pytest.mark.parametrize(
+    ("settings", "field"),
+    [
+        ("targetOptimizeSettings", "optimize_batch_threshold"),
+        ("targetAnalyzeSettings", "analyze_batch_threshold"),
+    ],
+)
+def test_runner_rejects_non_positive_maintenance_threshold(settings, field):
+    """batchThreshold 0 would divide by zero in the maintenance cadence
+    after every tick's commit; the runner refuses it up front."""
+    doc = json.loads(json.dumps(SPEC_DOC))
+    doc["sink"]["maintenanceSettings"][settings]["batchThreshold"] = 0
+    spec = spec_from_json(json.dumps(doc), target_root="/lake/currency")
+    with pytest.raises(ValueError, match=field):
+        StreamRunner(None, spec)
+
+
 def test_spec_from_env():
     env = {
         "STREAMCONTEXT__SPEC": json.dumps(SPEC_DOC),

@@ -109,6 +109,26 @@ def test_metrics_add_no_jobs_and_report_rows_that_took_effect(spark, tmp_path):
     assert rec["rows"] == 5 + 1 + 3
     assert (rec["inserts"], rec["updates"], rec["deletes"]) == (2, 1, 1)
     assert rec["merged"] == 4
+    # the three stale re-uploads (KEYS[2..4]) took no effect
+    assert rec["noops"] == 3
+
+
+def test_bucketed_tick_runs_as_many_sql_executions_as_flat(spark, tmp_path):
+    """The touched buckets come from the pin's own observation, not from
+    a query of their own."""
+    fx = SynapseFixture(tmp_path / "source")
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    runners = {b: StreamRunner(spark, _spec(tmp_path, f"t{b}", bucket_count=b)) for b in (0, 8)}
+    for r in runners.values():
+        r.backfill()
+    fx.upload_batch(minus(minutes=5), add_delete=True, add_upsert=True, update_changelog=True)
+    executions = {}
+    for b, r in runners.items():
+        before = _last_sql_id(spark)
+        assert r.run_once() == 1
+        executions[b] = len(_sql_plans_after(spark, before))
+    assert executions[8] == executions[0]
+    assert _state(spark, runners[8]) == _state(spark, runners[0])
 
 
 def _widened_batch(fx, ts, rows):
