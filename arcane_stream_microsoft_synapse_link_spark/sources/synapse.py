@@ -171,8 +171,12 @@ class SynapseLinkSource:
                 continue
             if up_to is not None and name > up_to:
                 continue
-            out.append(BatchFolder(name=name, path=os.path.join(self.root, name)))
+            out.append(self.folder(name))
         return out
+
+    def folder(self, name: str) -> BatchFolder:
+        """The batch folder called ``name`` (a stream offset)."""
+        return BatchFolder(name=name, path=os.path.join(self.root, name))
 
     def pending(self, watermark: str | None) -> list[BatchFolder]:
         """Folders after the stored watermark up to the changelog frontier."""
@@ -197,14 +201,6 @@ class SynapseLinkSource:
                 if self.entity_name in model:
                     return model[self.entity_name]
         raise FileNotFoundError(f"no model.json declares entity {self.entity_name!r}")
-
-    def stream_entity(self) -> CdmEntity:
-        """The schema a stream starts with: the NEWEST batch folder's
-        (per-batch schemas, §1.3), else the container root's — a restarted
-        stream picks up mid-stream ADD COLUMNs, matching the reference's
-        staging-vs-target diff (B10) driven from batch schemas."""
-        folders = self.list_folders()
-        return self.entity_schema(folders[-1] if folders else None)
 
     # ---- data (A3/B21) -----------------------------------------------------
     def batch_csvs(self, folder: BatchFolder) -> list[str]:

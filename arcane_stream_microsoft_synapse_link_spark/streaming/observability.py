@@ -7,7 +7,9 @@ per-batch metrics recorder the runner feeds (rows, wall seconds, rows/s —
 the numbers the reference's advisedRate throughput contract is stated in),
 persisted as JSONL so any scraper can tail it, and (b) a
 ``StreamingQueryListener`` that captures Structured Streaming progress
-events (batch duration, input rows) for the readStream path.
+events (batch duration, input rows) of one readStream query.  The CDC
+source emits one row per batch folder, so there ``numInputRows`` counts
+folders; the per-batch JSONL counts rows.
 
 No driver-side aggregation of data rows happens here — metrics are O(1)
 per batch regardless of batch size.
@@ -165,22 +167,39 @@ class MetricsRecorder:
         return sum(m.rows for m in self.metrics)
 
 
-def jsonl_progress_listener(path: str):
-    """StreamingQueryListener that appends every progress event (micro-batch
-    id, input rows, duration) to a JSONL file. Attach with
-    ``spark.streams.addListener(jsonl_progress_listener(path))``."""
+def jsonl_progress_listener(path: str, streams):
+    """StreamingQueryListener that appends ONE query's progress events
+    (started, each micro-batch's id, input rows and durations, terminated)
+    to a JSONL file.  Register it with ``streams.addListener``, start the
+    query, then ``bind(query)``: events that arrive before the bind (a
+    query's started event always does) are held until then, events of
+    other queries are dropped, and after its query terminates the listener
+    removes itself from ``streams``."""
+    import threading
+
     from pyspark.sql.streaming import StreamingQueryListener
 
     class _Listener(StreamingQueryListener):
+        def __init__(self):
+            self._lock = threading.Lock()
+            self._run_id: str | None = None
+            self._held: list[dict] = []
+
+        def bind(self, query) -> None:
+            with self._lock:
+                self._run_id = str(query.runId)
+            self._emit()
+
         def onQueryStarted(self, event):
-            self._write({"event": "started", "id": str(event.id)})
+            self._emit({"event": "started", "id": str(event.id), "runId": str(event.runId)})
 
         def onQueryProgress(self, event):
             p = event.progress
-            self._write(
+            self._emit(
                 {
                     "event": "progress",
                     "id": str(p.id),
+                    "runId": str(p.runId),
                     "batchId": p.batchId,
                     "numInputRows": p.numInputRows,
                     "durationMs": dict(p.durationMs or {}),
@@ -188,14 +207,27 @@ def jsonl_progress_listener(path: str):
             )
 
         def onQueryTerminated(self, event):
-            self._write({"event": "terminated", "id": str(event.id)})
+            self._emit({"event": "terminated", "id": str(event.id), "runId": str(event.runId)})
 
         def onQueryIdle(self, event):
             pass
 
-        def _write(self, obj: dict) -> None:
-            os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-            with open(path, "a") as fh:
-                fh.write(json.dumps(obj) + "\n")
+        def _emit(self, obj: dict | None = None) -> None:
+            """Hold ``obj``; once bound, write the held events of this
+            query in arrival order (the bus thread and ``bind`` may both
+            flush) and drop the rest."""
+            with self._lock:
+                if obj is not None:
+                    self._held.append(obj)
+                if self._run_id is None:
+                    return
+                mine = [o for o in self._held if o["runId"] == self._run_id]
+                self._held.clear()
+                if mine:
+                    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+                    with open(path, "a") as fh:
+                        fh.writelines(json.dumps(o) + "\n" for o in mine)
+            if any(o["event"] == "terminated" for o in mine):
+                streams.removeListener(self)
 
     return _Listener()

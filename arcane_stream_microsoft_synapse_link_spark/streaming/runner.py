@@ -73,9 +73,6 @@ class StreamSpec:
     # because only key-derived partitions are safe to prune a MERGE by
     target_partition_transforms: tuple[tuple[str, str], ...] = ()
     max_folders_per_tick: int = 0  # coarse admission cap (folders per tick)
-    # structured path: byte-range split threshold for oversized batch CSVs
-    # (sources/stream.py:_csv_split_points); 0 → the source default (32 MiB)
-    chunk_bytes: int = 0
     # B6 grouping (docs/crd.md:35-43): rows are emitted in groups of at most
     # rowsPerGroup; a partial group goes out when the grouping interval
     # elapses — here: per-commit row cap + backlog drain cadence
@@ -500,14 +497,21 @@ class StreamRunner:
             return self._run_once_grouped(pending)
 
         self._deferred = False
-        df = self.source.read_folders(self.spark, pending)
-        if df is not None:
-            self._merge_folder_batch(df, pending[-1].name)
-        else:
-            # no data for this entity — still advance the frontier
-            self.table.set_watermark(pending[-1].name)
+        self.merge_folders(pending)
         self.stats.folders_seen.extend(f.name for f in pending)
         return len(pending)
+
+    def merge_folders(self, folders: list[BatchFolder]) -> None:
+        """Read a folder range and merge it as ONE deduplicated group, then
+        advance the watermark to its last folder; a range holding no data
+        for this entity only advances the watermark.  The read-and-merge
+        step of every driver: ``run_once``, the grouped path and each
+        ``run_structured`` micro-batch."""
+        df = self.source.read_folders(self.spark, folders)
+        if df is not None:
+            self._merge_folder_batch(df, folders[-1].name)
+        else:
+            self.table.set_watermark(folders[-1].name)
 
     def _run_once_grouped(self, pending: list[BatchFolder]) -> int:
         """Row-granular admission (B6 + B18): one count pass over the
@@ -549,22 +553,17 @@ class StreamRunner:
                     if prefetch is not None:  # bounded waste: drop the read-ahead
                         _release(prefetch.result())
                     break  # over the advised rate — defer the rest of the backlog
-                prefetched = False
-                if prefetch is not None:
-                    df = prefetch.result()
-                    prefetch = None
-                    prefetched = True
-                else:
-                    df = self.source.read_folders(self.spark, grp)
+                ahead, prefetch = prefetch, None
                 if executor is not None and i + 1 < len(groups) and not self._stop:
                     nxt = groups[i + 1]
                     nxt_rows = sum(counts[f.name] for f in nxt)
                     if self.spec.max_buffer_rows <= 0 or nxt_rows <= self.spec.max_buffer_rows:
                         prefetch = executor.submit(_read_materialized, nxt)
-                if df is not None:
+                if ahead is None:
+                    self.merge_folders(grp)
+                elif (df := ahead.result()) is not None:
                     self._merge_folder_batch(df, grp[-1].name)
-                    if prefetched:
-                        _release(df)  # drop the buffer's pinned blocks
+                    _release(df)  # drop the buffer's pinned blocks
                 else:
                     self.table.set_watermark(grp[-1].name)
                 self.stats.folders_seen.extend(f.name for f in grp)

@@ -9,8 +9,11 @@ is committed by Spark after each successful micro-batch), and
 replace change-capture vs batch-backfill scheduling
 (crd-microsoft-synapse-link-beta.yaml execution backends).
 
-``StreamRunner`` (runner.py) remains as the driver-side fallback loop the
-survey's M3 plan calls for; both share the same transform + merge chain.
+The source supplies offsets only (the folder names of each micro-batch);
+``foreachBatch`` hands them to ``StreamRunner.merge_folders`` — the step
+the driver-side loop (runner.py, the survey's M3 fallback) runs every
+tick — so both drivers read CSV through the one JVM reader and merge
+through the same chain.
 
 The streaming intake gates (``run_*_stream``) all run through one
 combinator, ``_run_gate``, and its replay contract is theirs: a gate's
@@ -48,10 +51,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.merge import cdc_merge
-from ..sources.cdm import apply_schema
-from ..sources.stream import register, stream_schema
-from ..sources.synapse import SynapseLinkSource
+from ..sources.stream import register
 from ..streaming.runner import StreamRunner, StreamSpec
 
 # Test-only fault injection point: called as fault_hook(stage, batch_id)
@@ -343,32 +343,22 @@ def _compact_batches_locked(
 
 
 def read_stream(spark: SparkSession, spec: StreamSpec) -> DataFrame:
-    """Build the typed streaming source for a spec.
-
-    The source tokenizes only (raw strings + ``_batch_folder``); the
-    stream's entity is resolved once here, handed to the source as its
-    schema, and its columns are typed by ``cdm.apply_schema`` — the casts
-    the batch reader uses, so both paths read the same bytes the same way.
+    """The spec's ``synapse_link`` stream: one ``_batch_folder`` row per
+    admitted batch folder.
 
     Volume-scaled admission: ``max_folders_per_tick`` maps onto
     ``maxFoldersPerTrigger`` (the same coarse B6/B18 cap the batch runner
     enforces per tick) so the batch and structured paths shape intake
-    identically, and oversized batch CSVs are byte-range-split for a
-    full-width parallel parse (``chunkBytes``,
-    sources/stream.py:_csv_split_points)."""
+    identically."""
     register(spark)
-    entity = SynapseLinkSource(spec.source_root, spec.entity_name).stream_entity()
     reader = (
         spark.readStream.format("synapse_link")
-        .schema(stream_schema(entity))
         .option("path", spec.source_root)
         .option("entity", spec.entity_name)
     )
     if spec.max_folders_per_tick:
         reader = reader.option("maxFoldersPerTrigger", spec.max_folders_per_tick)
-    if spec.chunk_bytes:
-        reader = reader.option("chunkBytes", spec.chunk_bytes)
-    return apply_schema(reader.load(), entity, "_batch_folder")
+    return reader.load()
 
 
 def run_structured(
@@ -381,26 +371,18 @@ def run_structured(
 
     ``available_now=True`` drains everything pending then stops (the test /
     cron-batch mode); ``False`` runs continuously at the change-capture
-    interval. Each micro-batch applies the same prepare→dedup→version-
-    guarded-merge chain as the batch runner, then commits a snapshot and
-    the sink-side watermark — merge idempotency makes replay of an
+    interval. Each micro-batch collects its folder names and runs the
+    batch runner's read-and-merge step on them (``merge_folders``: the
+    prepare→dedup→version-guarded-merge chain, a snapshot commit, then the
+    sink-side watermark) — merge idempotency makes replay of an
     uncommitted batch a no-op (exactly-once, SURVEY.md §7 item 4).
     """
     runner = StreamRunner(spark, spec)
-    if spec.metrics_path:
-        from .observability import jsonl_progress_listener
-
-        spark.streams.addListener(jsonl_progress_listener(spec.metrics_path))
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        wm = batch_df.agg(F.max("_batch_folder")).first()[0]
-        runner._merge_folder_batch(
-            batch_df.drop("_batch_folder"), up_to_folder=wm or f"batch-{batch_id}"
-        )
+        names = sorted(r[0] for r in batch_df.collect())
+        if names:
+            runner.merge_folders([runner.source.folder(n) for n in names])
 
     writer = read_stream(spark, spec).writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -409,7 +391,19 @@ def run_structured(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=f"{int(spec.change_capture_interval_s)} seconds")
-    return writer.start()
+    if not spec.metrics_path:
+        return writer.start()
+    from .observability import jsonl_progress_listener
+
+    listener = jsonl_progress_listener(spec.metrics_path, spark.streams)
+    spark.streams.addListener(listener)
+    try:
+        query = writer.start()
+    except BaseException:
+        spark.streams.removeListener(listener)
+        raise
+    listener.bind(query)
+    return query
 
 
 def windowed_event_counts(

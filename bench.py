@@ -513,8 +513,9 @@ def cdc_bench(spark) -> dict:
 
 
 def _readstream_bench(spark, tmp: str, total_rows: int = 60000) -> float:
-    """Drain the SAME timed source folders through the Python DataSource
-    readStream path (Arrow RecordBatch reader) into a fresh target —
+    """Drain the SAME timed source folders through the readStream path
+    (``synapse_link`` folder offsets, each micro-batch read and merged by
+    the batch runner's step) into a fresh target —
     comparing intake against the batch-runner rate on identical input.
     The warm scenario already compiled the merge plan shapes; the stream
     source's own plan warms on the (untimed) warm-scale source first."""
@@ -1466,138 +1467,6 @@ def scale_dedup_d2() -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def readstream_decompose() -> None:
-    """Decompose the readStream-vs-batch residual (VERDICT r10 item 4:
-    140k vs 316k rows/s at 100×) into its layers, over IDENTICAL source
-    folders (n=1M backfill + 2M change window = 3M rows, the 50× shape):
-
-    - ``parse_core``: the reader's own ``read(partition)`` loop run
-      in-process on ONE thread over all planned chunk partitions — the
-      pure pyarrow CSV parse + typed-convert ceiling with zero Spark,
-      zero Python-worker boundary.  ``x32_ideal`` = that rate × 32, the
-      no-overhead upper bound for this box.
-    - ``source_boundary``: ``readStream.format("synapse_link")`` →
-      ``foreachBatch(count)`` availableNow — adds the Python DataSource
-      planner, the Arrow IPC hop across the Python-worker socket, and
-      Spark scheduling, but NO merge.
-    - ``full_merge``: ``run_structured`` (the CDC gate) — adds the
-      per-micro-batch MERGE into the versioned target.
-
-    ``source_boundary`` is also swept over chunkBytes ∈ {8, 32, 128} MiB
-    to expose partition-granularity effects (default 32 MiB).  Writes
-    SCALE_RS_DECOMP.json; run ``python bench.py --readstream-decompose``."""
-    import shutil
-    import tempfile
-    import time as _time
-    from datetime import datetime
-
-    from arcane_stream_microsoft_synapse_link_spark.sources.stream import (
-        SynapseLinkStreamReader,
-        register,
-    )
-    from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamSpec
-    from arcane_stream_microsoft_synapse_link_spark.streaming.structured import (
-        run_structured,
-    )
-    from tests.synapse_fixture import ENTITY
-
-    spark = get_spark("arcane-rs-decomp")
-    spark.sparkContext.setLogLevel("ERROR")
-    tmp = tempfile.mkdtemp(prefix="rs_decomp_")
-    n = int(os.environ.get("RS_DECOMP_N", 1_000_000))
-    total = 3 * n
-    out: dict = {"rows": total}
-    try:
-        # warm + timed sources (the scale_sweep fixture discipline)
-        _cdc_scenario(
-            spark, os.path.join(tmp, "warm"), n=2000,
-            base_ts=datetime(2021, 5, 1, 12, 0, 0),
-        )
-        # build the timed folders WITHOUT running the batch CDC on them:
-        # only the fixture writes matter here, but _cdc_scenario also
-        # yields the batch-runner rates for the same folders — record them
-        # as the comparison target.
-        r = _cdc_scenario(
-            spark, os.path.join(tmp, "timed"), n=n,
-            base_ts=datetime(2021, 6, 1, 12, 0, 0),
-        )
-        out["batch_backfill_rows_per_sec"] = round(n / r["backfill_s"], 1)
-        out["batch_stream_rows_per_sec"] = round(r["streamed_rows"] / r["stream_s"], 1)
-        src = os.path.join(tmp, "timed", "source")
-
-        # ---- stage 1: in-process single-thread parse ceiling ----
-        reader = SynapseLinkStreamReader(src, ENTITY)
-        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
-        t0 = _time.perf_counter()
-        got = 0
-        for p in parts:
-            for batch in reader.read(p):
-                got += batch.num_rows
-        core_s = _time.perf_counter() - t0
-        out["parse_core"] = {
-            "partitions": len(parts),
-            "rows": got,
-            "rows_per_sec_1core": round(got / core_s, 1),
-            "x32_ideal_rows_per_sec": round(32 * got / core_s, 1),
-        }
-
-        # ---- stage 2: source + boundary, no merge (chunkBytes sweep) ----
-        register(spark)
-        seq = {"n": 0}
-
-        def boundary(chunk_mib: int) -> float:
-            seq["n"] += 1  # fresh checkpoint per drain, or the replay is empty
-            sink = {"rows": 0}
-
-            def step(df, _bid):
-                sink["rows"] += df.count()
-
-            q = (
-                spark.readStream.format("synapse_link")
-                .option("path", src)
-                .option("entity", ENTITY)
-                .option("chunkBytes", str(chunk_mib * 1024 * 1024))
-                .load()
-                .writeStream.foreachBatch(step)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(tmp, f"ckpt_boundary_{chunk_mib}_{seq['n']}"),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            t0 = _time.perf_counter()
-            q.awaitTermination(900)
-            took = _time.perf_counter() - t0
-            assert sink["rows"] == total, (sink["rows"], total)
-            return round(total / took, 1)
-
-        boundary(32)  # warm the boundary plan shape once
-        out["source_boundary_rows_per_sec"] = {
-            f"{mib}MiB": boundary(mib) for mib in (8, 32, 128)
-        }
-
-        # ---- stage 3: full CDC gate (merge included) ----
-        spec = StreamSpec(
-            entity_name=ENTITY,
-            source_root=src,
-            target_root=os.path.join(tmp, "rs_target"),
-        )
-        t0 = _time.perf_counter()
-        run_structured(spark, spec, os.path.join(tmp, "rs_ckpt")).awaitTermination(900)
-        out["full_merge_rows_per_sec"] = round(total / (_time.perf_counter() - t0), 1)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "SCALE_RS_DECOMP.json"
-        ),
-        "w",
-    ) as fh:
-        json.dump(out, fh, indent=1)
-    print(json.dumps(out))
-
-
 if __name__ == "__main__":
     if "--scale-sweep" in sys.argv:
         scale_sweep()
@@ -1609,7 +1478,5 @@ if __name__ == "__main__":
         scale_ops_d2()
     elif "--scale-dedup-d2" in sys.argv:
         scale_dedup_d2()
-    elif "--readstream-decompose" in sys.argv:
-        readstream_decompose()
     else:
         main()

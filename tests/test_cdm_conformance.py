@@ -1,24 +1,21 @@
 """One CDM value semantics on every read path.
 
 A table of raw CSV lines × CDM types with the typed row each must become.
-Every line goes through the three ways the engine reads a Synapse Link
-CSV, and all three must give exactly the expected rows:
+Every line goes through the two ways the engine reads a Synapse Link CSV
+(``cdm.read_entity_csv``, which both the batch runner and each readStream
+micro-batch use), and both must give exactly the expected rows:
 
 1. the unsplittable ``multiLine`` read (``read_entity_csv(...,
    line_splittable=False)``);
 2. the byte-range-splittable text + ``from_csv`` read — for the file whose
    quote parity allows it; the file holding a record that spans lines is
-   declined by the parity probe and read by the default path;
-3. an ``availableNow`` drain through ``streaming.structured.read_stream``
-   (the Python source tokenizes, including byte-range chunks and the
-   ``csv.reader`` fallback for ragged rows; the JVM casts type).
+   declined by the parity probe and read by the default path.
 """
 
 from __future__ import annotations
 
 import json
 import math
-import os
 from datetime import datetime
 from decimal import Decimal
 
@@ -27,8 +24,6 @@ from arcane_stream_microsoft_synapse_link_spark.sources.cdm import (
     parse_model,
     read_entity_csv,
 )
-from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamSpec
-from arcane_stream_microsoft_synapse_link_spark.streaming.structured import read_stream
 
 ENTITY = "conformance"
 COLUMNS = [
@@ -158,18 +153,10 @@ def _model() -> str:
 
 
 def test_every_read_path_types_cdm_values_alike(spark, tmp_path):
-    root = tmp_path / "source"
-    folder = "2021-01-01T00.00.00Z"
-    data = root / folder / ENTITY
-    data.mkdir(parents=True)
-    (root / "model.json").write_text(_model())
-    (root / folder / "model.json").write_text(_model())
-    clean = data / "clean.csv"
+    clean = tmp_path / "clean.csv"
     clean.write_text("\n".join([*map(_line, CASES), RAGGED_LINE]) + "\n", encoding="utf-8")
-    nl = data / "newline.csv"
+    nl = tmp_path / "newline.csv"
     nl.write_text(_line(NEWLINE_CASE) + "\n", encoding="utf-8")
-    (root / "Changelog").mkdir()
-    (root / "Changelog" / "changelog.info").write_text(folder)
 
     expected = _comparable([*map(_row, CASES), RAGGED_ROW, _row(NEWLINE_CASE)])
     entity = parse_model(_model())[ENTITY]
@@ -185,33 +172,3 @@ def test_every_read_path_types_cdm_values_alike(spark, tmp_path):
     assert _read_line_splittable(spark, str(nl), entity) is None
     split_rows = fast.collect() + read_entity_csv(spark, str(nl), entity).collect()
     assert _comparable(split_rows) == expected
-
-    # 3. readStream drain; small chunks so the clean file is read as
-    # several byte ranges
-    spec = StreamSpec(
-        entity_name=ENTITY,
-        source_root=str(root),
-        target_root=str(tmp_path / "target"),
-        chunk_bytes=os.path.getsize(clean) // 4,
-    )
-    stream = read_stream(spark, spec)
-    assert [f.dataType for f in stream.schema.fields[: len(NAMES)]] == [
-        f.dataType for f in entity.typed_schema().fields
-    ]
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("cdm_conformance")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-        streamed = spark.table("cdm_conformance")
-        assert {r["_batch_folder"] for r in streamed.select("_batch_folder").collect()} == {
-            folder
-        }
-        assert _comparable(streamed.drop("_batch_folder").collect()) == expected
-    finally:
-        q.stop()
-        spark.catalog.dropTempView("cdm_conformance")

@@ -11,10 +11,7 @@ from dataclasses import replace
 import pytest
 
 from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner, StreamSpec
-from arcane_stream_microsoft_synapse_link_spark.streaming.structured import (
-    read_stream,
-    run_structured,
-)
+from arcane_stream_microsoft_synapse_link_spark.streaming.structured import run_structured
 
 from .synapse_fixture import BASE_VERSION, ENTITY, KEYS, SynapseFixture, minus
 
@@ -124,52 +121,154 @@ def test_schema_evolution_through_stream(spark, scenario):
 
 def test_max_folders_per_trigger_caps_admission(spark, scenario):
     """B18 static shaper: a continuously-triggered stream with
-    maxFoldersPerTrigger=1 admits one folder per micro-batch (availableNow
-    drains are deliberately uncapped — the frontier is captured before
-    initialOffset). Same final state, work split across batches."""
+    maxFoldersPerTrigger=1 admits one folder per micro-batch once it runs
+    (its first trigger, which Spark plans before the source learns its
+    start offset, is uncapped — and so is an availableNow drain).  Same
+    final state, one folder per batch."""
     import time
 
     fx, spec, ckpt = scenario
-    fx.upload_batch(minus(hours=3))
-    fx.upload_batch(minus(hours=2))
-    fx.upload_batch(minus(hours=1), add_upsert=True, update_changelog=True)
-
-    from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner
-
-    runner = StreamRunner(spark, spec)
-
-    def merge_batch(batch_df, batch_id):
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        wm = batch_df.agg(F.max("_batch_folder")).first()[0]
-        runner._merge_folder_batch(batch_df.drop("_batch_folder"), up_to_folder=wm)
-
-    q = (
-        read_stream(spark, replace(spec, max_folders_per_tick=1))
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="1 second")
-        .start()
-    )
+    spec = replace(spec, max_folders_per_tick=1, change_capture_interval_s=1)
+    q = run_structured(spark, spec, ckpt, available_now=False)
     try:
         deadline = time.time() + 90
-        while time.time() < deadline and len(runner.stats.folders_seen) == 0:
-            # runner.folders_seen is unused on this path; poll table state
-            try:
-                if len(_state(spark, spec)) == 7 and runner.stats.batches_merged >= 2:
-                    break
-            except FileNotFoundError:
-                pass
-            time.sleep(1)
+        while not q.recentProgress:  # the first, empty trigger
+            assert time.time() < deadline
+            time.sleep(0.2)
+        fx.upload_batch(minus(hours=3))
+        fx.upload_batch(minus(hours=2))
+        last = fx.upload_batch(minus(hours=1), add_upsert=True, update_changelog=True)
+        _wait_watermark(spec.target_root, last)
     finally:
         q.stop()
     state = _state(spark, spec)
     assert len(state) == 7  # 5 base + 2 inserts
-    # admission capping split the drain into multiple micro-batches
-    # (exact batch count depends on commit-callback vs trigger timing)
-    assert runner.stats.batches_merged >= 2
+    # the source emits one row per admitted folder: three folders, three
+    # micro-batches of one
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [1, 1, 1]
+
+
+def _wait_watermark(root, folder, timeout_s=90):
+    import time
+
+    from arcane_stream_microsoft_synapse_link_spark.tables import VersionedTable
+
+    deadline = time.time() + timeout_s
+    while VersionedTable(root).watermark() != folder:
+        assert time.time() < deadline, f"watermark never reached {folder}"
+        time.sleep(0.3)
+
+
+def test_structured_and_batch_drivers_agree(spark, tmp_path):
+    """run_structured and run_once over one history give the same target
+    rows and watermark: a delete, a stale re-upload, an insert deleted in
+    the same window, and a model.json ADD COLUMN that lands while a
+    processingTime query runs (merged at once, no restart), then a folder
+    on the old schema."""
+    from arcane_stream_microsoft_synapse_link_spark.tables import VersionedTable
+
+    from .synapse_fixture import data_row, delete_row
+
+    fx = SynapseFixture(tmp_path / "source")
+    fx.upload_batch(minus(hours=4))
+    fx.upload_batch(minus(hours=3), add_delete=True, add_upsert=True)
+    stale = fx.write_folder(
+        minus(hours=2),
+        [data_row(KEYS[1], BASE_VERSION + 1, "D-STALE"), delete_row(KEYS[5], BASE_VERSION + 200)],
+    )
+    fx.set_changelog(stale)
+
+    def spec(name):
+        return StreamSpec(
+            entity_name=ENTITY,
+            source_root=fx.root,
+            target_root=str(tmp_path / name),
+            change_capture_interval_s=1,
+        )
+
+    batch = StreamRunner(spark, spec("batch"))
+    streamed = spec("stream")
+    q = run_structured(spark, streamed, str(tmp_path / "ckpt"), available_now=False)
+    try:
+        steps = [
+            lambda: stale,
+            lambda: fx.upload_evolved_batch(
+                minus(hours=1), key=KEYS[2], version=BASE_VERSION + 300,
+                display="D-EVOLVED", extra_value="X1",
+            ),
+            lambda: fx.write_folder(
+                minus(minutes=30), [data_row(KEYS[3], BASE_VERSION + 400, "D-LATE")]
+            ),
+        ]
+        for step in steps:
+            folder = step()
+            fx.set_changelog(folder)
+            assert batch.run_once() >= 1
+            _wait_watermark(streamed.target_root, folder)
+    finally:
+        q.stop()
+
+    def rows(root):
+        table = VersionedTable(root)
+        return table.watermark(), {r["Id"]: r.asDict() for r in table.read(spark).collect()}
+
+    want, got = rows(batch.spec.target_root), rows(streamed.target_root)
+    assert got == want
+    assert set(want[1]) == set(KEYS) - {KEYS[0], KEYS[5]}
+    assert want[1][KEYS[2]]["extracol"] == "X1"
+    assert want[1][KEYS[1]]["displayvalue"] == "D-UPDATED"
+    assert (want[1][KEYS[3]]["displayvalue"], want[1][KEYS[3]]["extracol"]) == ("D-LATE", None)
+
+
+def test_progress_listener_writes_only_its_own_query(spark, tmp_path):
+    """Two drains with metrics in one session: each JSONL holds exactly its
+    own query's started, progress and terminated events, and each listener
+    is gone once its query has terminated."""
+    import json
+    import time
+
+    fx = SynapseFixture(tmp_path / "source")
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    listeners = spark.streams._jsqm.listListeners
+    before = len(listeners())
+    runs = []
+    for i in range(2):
+        spec = StreamSpec(
+            entity_name=ENTITY,
+            source_root=fx.root,
+            target_root=str(tmp_path / f"target{i}"),
+            metrics_path=str(tmp_path / f"m{i}.jsonl"),
+        )
+        q = run_structured(spark, spec, str(tmp_path / f"ckpt{i}"))
+        q.awaitTermination(120)
+        runs.append((spec.metrics_path, str(q.runId)))
+
+    def events(path):
+        """The listener's events; the runner's per-batch records share
+        the file."""
+        if not os.path.exists(path):
+            return []
+        with open(path) as fh:
+            return [e for e in map(json.loads, fh) if "event" in e]
+
+    # the listener bus is asynchronous: wait for both terminations and the
+    # listeners' removal
+    def settled():
+        ends = [events(p)[-1:] for p, _ in runs]
+        return len(listeners()) == before and all(e and e[0]["event"] == "terminated" for e in ends)
+
+    deadline = time.time() + 60
+    while time.time() < deadline and not settled():
+        time.sleep(0.2)
+    time.sleep(1.0)  # any stray late event would land by now
+    for path, run_id in runs:
+        got = events(path)
+        kinds = [e["event"] for e in got]
+        assert {e["runId"] for e in got} == {run_id}, (path, got)
+        assert kinds[0] == "started" and kinds[-1] == "terminated", kinds
+        assert kinds.count("started") == kinds.count("terminated") == 1, kinds
+        assert "progress" in kinds
+    assert len(listeners()) == before
 
 
 def test_analyze_stats(spark, scenario):
@@ -1538,17 +1637,14 @@ def test_compact_batches_single_compactor_lock(spark, tmp_path):
 
 
 def test_readstream_chunked_large_csv_with_embedded_newlines(spark, tmp_path):
-    """Sub-file parallelism for huge batch CSVs (the 100×-volume intake
-    gap): a single large CSV is planned as multiple parity-safe byte
-    ranges, the parse fans out across workers, and the merged target is
-    byte-identical to the unsplit read — including rows whose quoted
-    display value embeds newlines (parity cuts never land inside them)."""
+    """A single large batch CSV whose quoted display values embed newlines
+    drains through the readStream path into a target identical to the
+    source rows — the multi-line records survive the stream's read.
+    (The file fails the quote-parity probe, so the batch runner's reader
+    takes its multiLine read.)"""
     import os
     from datetime import datetime
 
-    from arcane_stream_microsoft_synapse_link_spark.sources.stream import (
-        SynapseLinkStreamReader,
-    )
     from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamSpec
     from arcane_stream_microsoft_synapse_link_spark.tables import VersionedTable
     from .synapse_fixture import data_row, model_json
@@ -1569,25 +1665,13 @@ def test_readstream_chunked_large_csv_with_embedded_newlines(spark, tmp_path):
         fh.write("\n".join(rows) + "\n")
     fx.set_changelog(name)
 
-    # the planner must actually split: probe partitions() directly
-    reader = SynapseLinkStreamReader(str(tmp_path / "source"), ENTITY, chunk_bytes=64 * 1024)
-    parts = reader.partitions({"folder": ""}, reader.latestOffset())
-    assert len(parts) > 4, [p.offset for p in parts]
-    assert parts[0].offset == 0 and all(p.offset > 0 for p in parts[1:])
-
     spec = StreamSpec(
         entity_name=ENTITY,
         source_root=str(tmp_path / "source"),
         target_root=str(tmp_path / "target"),
     )
-    import arcane_stream_microsoft_synapse_link_spark.sources.stream as stream_mod
-    old = stream_mod.DEFAULT_CHUNK_BYTES
-    stream_mod.DEFAULT_CHUNK_BYTES = 64 * 1024
-    try:
-        q = run_structured(spark, spec, str(tmp_path / "ckpt"), available_now=True)
-        q.awaitTermination(120)
-    finally:
-        stream_mod.DEFAULT_CHUNK_BYTES = old
+    q = run_structured(spark, spec, str(tmp_path / "ckpt"), available_now=True)
+    q.awaitTermination(120)
     got = VersionedTable(spec.target_root).read(spark)
     assert got.count() == n
     sample = {

@@ -1,7 +1,7 @@
-"""Plan shape of one change-capture tick: the change CSV is parsed once,
-metrics ride on the commit's own plan (no Spark job of their own) and
-report the rows that took effect, and a bucketed table survives a column
-type change."""
+"""Plan shape of one change-capture tick: the change CSV is parsed once
+(by either driver), metrics ride on the commit's own plan (no Spark job of
+their own) and report the rows that took effect, and a bucketed table
+survives a column type change."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ import re
 from pyspark.sql import functions as F
 
 from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner, StreamSpec
+from arcane_stream_microsoft_synapse_link_spark.streaming.structured import run_structured
 
 from .conftest import count_jobs
 from .synapse_fixture import (
@@ -52,24 +53,38 @@ def _last_sql_id(spark):
 
 
 def test_run_once_scans_change_csv_once(spark, tmp_path):
+    """Both drivers: a ``run_once`` tick and a ``run_structured``
+    micro-batch each scan the change folder's CSV once."""
     fx = SynapseFixture(tmp_path / "source")
     fx.upload_batch(minus(hours=1), update_changelog=True)
-    for name, buckets in (("flat", 0), ("bucketed", 8)):
-        runner = StreamRunner(spark, _spec(tmp_path, name, bucket_count=buckets))
-        runner.backfill()
+    cases = [
+        (driver, name, buckets)
+        for driver in ("run_once", "run_structured")
+        for name, buckets in (("flat", 0), ("bucketed", 8))
+    ]
+    for k, (driver, name, buckets) in enumerate(cases):
+        spec = _spec(tmp_path, f"{driver}-{name}", bucket_count=buckets)
+        ckpt = str(tmp_path / f"ckpt-{driver}-{name}")
+        runner = StreamRunner(spark, spec)
+        if driver == "run_once":
+            runner.backfill()
+        else:
+            run_structured(spark, spec, ckpt).awaitTermination(120)
         folder = fx.upload_batch(
-            minus(minutes=30 - buckets), add_delete=True, add_upsert=True,
-            update_changelog=True,
+            minus(minutes=30 - k), add_delete=True, add_upsert=True, update_changelog=True
         )
         before = _last_sql_id(spark)
-        assert runner.run_once() == 1
+        if driver == "run_once":
+            assert runner.run_once() == 1
+        else:
+            run_structured(spark, spec, ckpt).awaitTermination(120)
         scans = [
             ln
             for plan in _sql_plans_after(spark, before)
             for ln in plan.splitlines()
             if re.match(r"\(\d+\) Scan (text|csv) ", ln)
         ]
-        assert len(scans) == 1, (name, scans)
+        assert len(scans) == 1, (driver, name, scans)
         assert runner.table.watermark() == folder
 
 
