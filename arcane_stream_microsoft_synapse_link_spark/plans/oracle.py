@@ -9,7 +9,7 @@ as allowed by SURVEY.md §2.D — values must still hash-match.
 # Entries whose oracle literals were computed against ONE fixed dataset:
 # name → the sf dir the VALUES were derived from (always the driver's
 # compare scale, /root/testdata/sf0.01).  Local harnesses (tests/
-# test_queries.py, tests/sweep_sf001.py) compare these entries at the
+# test_queries.py, tests/sweep_vanilla.py) compare these entries at the
 # pinned dir instead of the sweep scale; see plans/values_oracle.py.
 ORACLE_SF: dict[str, str] = {}
 

@@ -75,7 +75,7 @@ def _fixed_money(sum_fixed, frac_digits: int, round2: bool = True):
     true fractional digits, so the division is EXACT), optionally
     ROUND(·, 2) HALF_UP (sign-correct), then one decimal→double cast —
     bit-identical to summing the equivalent decimal products directly
-    (verified row-identical on the declared corpus, tools/exp_decimal_r14).
+    (verified row-identical on the declared corpus, commit 83cf290).
     DECIMAL(32,0) holds 1e32 fixed-point units — overflow-safe past any
     100 TB corpus where a bare BIGINT accumulator (9.2e18) would not be."""
     q = sum_fixed.cast("decimal(32,0)") / (10 ** frac_digits)

@@ -52,6 +52,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.stream import register
+from ..sources.synapse import _SCHEME_RE
 from ..streaming.runner import StreamRunner, StreamSpec
 
 # Test-only fault injection point: called as fault_hook(stage, batch_id)
@@ -349,7 +350,18 @@ def read_stream(spark: SparkSession, spec: StreamSpec) -> DataFrame:
     Volume-scaled admission: ``max_folders_per_tick`` maps onto
     ``maxFoldersPerTrigger`` (the same coarse B6/B18 cap the batch runner
     enforces per tick) so the batch and structured paths shape intake
-    identically."""
+    identically.
+
+    The source lists its offsets in Spark's Python planner worker, which
+    has no SparkSession for the Hadoop FileSystem a scheme'd root
+    (``file://``, ``abfss://``, ``s3://``) needs, so such a root is
+    refused here on the driver rather than failing in that worker."""
+    if _SCHEME_RE.match(spec.source_root):
+        raise ValueError(
+            f"read_stream cannot list source root {spec.source_root!r}: the "
+            "synapse_link stream source reads local paths only; run a "
+            "scheme'd root with StreamRunner.run or run_once"
+        )
     register(spark)
     reader = (
         spark.readStream.format("synapse_link")

@@ -19,6 +19,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from arcane_stream_microsoft_synapse_link_spark.profile import (  # noqa: E402
+    gc_hint as _gc_hint,
+    release_cached_blocks as _release_cached_blocks,
+    steal_seconds as _steal_seconds,
+)
 from arcane_stream_microsoft_synapse_link_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -326,20 +331,6 @@ def _short(name: str) -> str:
     return name[4:] if name.startswith("ops_") else name
 
 
-def _release_cached_blocks(spark) -> None:
-    """Unpersist every cached/checkpointed RDD left behind by a query.
-
-    localCheckpoint() pins blocks until the JVM garbage-collects the RDD;
-    across an 86-query run those blocks accumulate and squeeze execution
-    memory for the tail queries (observed as multi-x slowdowns on late
-    queries with untouched code)."""
-    try:
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-    except Exception:
-        pass
-
-
 def _contaminated(wall: float, stolen: float, min_wall: float) -> bool:
     """Whether one timed run measured the environment, not the engine.
 
@@ -360,40 +351,6 @@ def _contaminated(wall: float, stolen: float, min_wall: float) -> bool:
     return stolen > max(5.0, 1.5 * min_wall) or wall > max(
         4 * min_wall, min_wall + 2.0
     )
-
-
-def _steal_seconds() -> float:
-    """Cumulative hypervisor steal time of this VM in CPU-seconds
-    (/proc/stat col 8, jiffies/100): the sandbox shares a host, and
-    steal spikes are the measured root cause of the multi-entity bench
-    variance (r13 diagnosis, tools/diag_multi_entity2.py) — an attempt
-    that lost 170 CPU-s to the neighbor measures the neighbor.  Returns
-    0.0 where /proc/stat is unavailable (the estimator then degrades to
-    plain median-of-3)."""
-    try:
-        with open("/proc/stat") as fh:
-            return int(fh.readline().split()[8]) / 100.0
-    except (OSError, ValueError, IndexError):
-        return 0.0
-
-
-def _gc_hint(spark) -> None:
-    """Nudge the driver JVM to GC so ContextCleaner actually runs.
-
-    Spark frees shuffle files and broadcast blocks only when the driver
-    garbage-collects the weakly-referenced RDD/broadcast handles — and a
-    128 GiB heap under a ~360-execution bench run may never GC on its own.
-    Measured without this: entries in the run's back half inflate 3-10×
-    (ops_cube_agg 2.1→19.1 s, q14 0.6→10.4 s) and the closing CDC scenario
-    drops from ~19k to ~8k rows/s, all with untouched code — accumulated
-    shuffle/broadcast state, not the plans. The production analog: a
-    resident multi-query service should leave periodic GC (or
-    ContextCleaner's periodicGC.interval, default 30 min) tuned well below
-    the rate queries retire shuffle state."""
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
 
 
 def _cdc_band_check(spark, cdc: dict) -> dict:
@@ -472,7 +429,7 @@ def cdc_bench(spark) -> dict:
             out["readstream_error"] = f"{type(exc).__name__}: {exc}"[:120]
         try:
             # the 8-concurrent-jobs tick is the noisiest scenario in the
-            # suite.  ROOT-CAUSED r13 (tools/diag_multi_entity2.py,
+            # suite.  ROOT-CAUSED r13 (commit ad3eb61,
             # SCALE.md §multi-entity-variance): the several-fold swings of
             # identical-code attempts are HYPERVISOR CPU STEAL — /proc/stat
             # steal jiffies spike exactly on the slow attempts (170 CPU-s

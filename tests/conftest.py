@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from arcane_stream_microsoft_synapse_link_spark.profile import job_span  # noqa: E402
 from arcane_stream_microsoft_synapse_link_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -26,14 +27,5 @@ def sf_dir():
 
 def count_jobs(spark, fn):
     """(result, Spark jobs ``fn`` started), counted by job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    out, span = job_span(spark, fn)
+    return out, span.jobs

@@ -3,9 +3,10 @@ replica of the driver's gate: no engine confs, executor PYTHONPATH set
 explicitly (the driver imports ``__spark_entry__`` from the repo root),
 ORACLE_SF-pinned entries compared at the gate's sf0.01 scale.
 
-Run: python tests/sweep_vanilla.py [sf_dir]
-Not collected by pytest (no test_ prefix); complements sweep_sf001.py
-(which uses the engine session factory).
+Run: python tests/sweep_vanilla.py [sf_dir [NAME...]]
+Without names it compares every oracle-backed entry; with names, only
+those (a name without an oracle fails).  Not collected by pytest (no
+test_ prefix).
 """
 
 from __future__ import annotations
@@ -17,11 +18,15 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from pyspark.sql import SparkSession  # noqa: E402
+
+import __spark_entry__ as entry  # noqa: E402
+from arcane_stream_microsoft_synapse_link_spark.plans import ORACLE_SF  # noqa: E402
+from tests.oracle_harness import compare  # noqa: E402
+
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-
-    from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -31,16 +36,10 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entry
-    from arcane_stream_microsoft_synapse_link_spark.plans import ORACLE_SF
-    from tests.oracle_harness import compare
-
     queries = entry.queries()
     oracle = entry.oracle_sql()
     fails = []
-    for name in queries:
-        if name not in oracle:
-            continue
+    for name in sys.argv[2:] or [n for n in queries if n in oracle]:
         t0 = time.time()
         try:
             ok, msg = compare(

@@ -68,6 +68,20 @@ def test_structured_stream_e2e(spark, scenario):
     assert any(e.get("event") == "progress" for e in events)
 
 
+def test_structured_stream_refuses_a_schemed_root_on_the_driver(spark, scenario):
+    """The source lists offsets in Spark's Python planner worker, which
+    cannot reach the Hadoop FileSystem, so a ``file://`` root is refused
+    before any query starts instead of failing at ``latestOffset``."""
+    fx, spec, ckpt = scenario
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    spec = replace(spec, source_root=f"file://{spec.source_root}")
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="file://.*StreamRunner.run or run_once"):
+        run_structured(spark, spec, ckpt, available_now=True)
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(ckpt)
+
+
 def test_structured_stream_resumes_from_checkpoint(spark, scenario):
     """New data after a drain: restart from the same checkpoint processes
     only the new folders (offset persistence), and the merge result is

@@ -29,10 +29,15 @@ import contextlib
 import io
 import json
 import os
+import re
 import sys
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from arcane_stream_microsoft_synapse_link_spark.plans import QUERIES  # noqa: E402
+from arcane_stream_microsoft_synapse_link_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -58,11 +63,7 @@ MARKERS = [
 
 
 def main() -> int:
-    from arcane_stream_microsoft_synapse_link_spark.session import get_spark
-
     spark = get_spark("plan-audit", shuffle_partitions=8)
-    from arcane_stream_microsoft_synapse_link_spark.plans import QUERIES
-
     out: dict[str, dict] = {}
     violations: list[str] = []
     for allowed in ALLOWED_CARTESIAN:
@@ -77,15 +78,12 @@ def main() -> int:
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
             plan = buf.getvalue()
-            import re as _re
-            from collections import Counter
-
             # count NODE HEADERS ("(12) Exchange"), one per plan node id:
             # plain substring counting credits every BroadcastExchange/
             # ReusedExchange to the shuffle 'Exchange' total (hiding
             # shuffle->broadcast conversions) and double-counts the tree
             # rendering vs the detail section
-            node_names = Counter(_re.findall(r"^\(\d+\) ([A-Za-z]+)", plan, _re.M))
+            node_names = Counter(re.findall(r"^\(\d+\) ([A-Za-z]+)", plan, re.M))
             counts = {m: node_names.get(m, 0) for m in MARKERS}
             counts = {m: c for m, c in counts.items() if c}
             rec: dict = {"nodes": counts}
