@@ -97,91 +97,6 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(shingles_col: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature as array<long>: sig[i] = min over shingles of
-    xxhash64(shingle, seed_i). Pure higher-order functions.
-
-    Shape matters: the input array must appear exactly ONCE in the
-    expression tree. The obvious spelling — transform over seeds with an
-    inner transform over shingles — re-evaluates the shingle expression per
-    seed (128×) after CollapseProject inlines upstream projections
-    (measured: 453 s for 5000 docs at sf0.1). Folding with ``aggregate``
-    over the shingle array instead evaluates it once per row: for each
-    shingle we derive num_hashes seeded hashes (seed = signature index,
-    via the index-aware transform lambda) and take the element-wise min."""
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
-    return F.aggregate(
-        shingles_col,
-        init,
-        lambda acc, h: F.transform(acc, lambda v, i: F.least(v, F.xxhash64(h, i))),
-    )
-
-
-def minhash_signatures_np(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 128,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, sig array<long>) MinHash signatures via vectorized numpy in
-    Arrow-batched mapInPandas — the fast path for signature computation.
-    All shingles of an Arrow chunk are hashed in ONE ``pd.util.hash_array``
-    call (C-speed SipHash, fixed key → deterministic across workers), then
-    the 128-hash family is a wrapping multiply-add over a (shingles × 128)
-    uint64 grid per doc. Identical LSH behavior to the JVM HOF fold
-    (different but equally-uniform hash values)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rng = np.random.RandomState(seed)
-    A = rng.randint(1, 2**63 - 1, size=num_hashes, dtype=np.uint64) | np.uint64(1)
-    B = rng.randint(0, 2**63 - 1, size=num_hashes, dtype=np.uint64)
-    word_re = re.compile(WORD_RE)
-    empty_sig = np.full(num_hashes, 2**63 - 1, dtype=np.uint64)
-
-    out_schema = T.StructType(
-        [T.StructField("_id", T.LongType()), T.StructField("_sig", T.ArrayType(T.LongType()))]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            all_grams: list[str] = []
-            offsets = [0]
-            for t in pdf[text_col]:
-                words_l = word_re.findall((t or "").lower())
-                if len(words_l) <= shingle_k:
-                    all_grams.append(" ".join(words_l))
-                else:
-                    all_grams.extend(
-                        {
-                            " ".join(words_l[i : i + shingle_k])
-                            for i in range(len(words_l) - shingle_k + 1)
-                        }
-                    )
-                offsets.append(len(all_grams))
-            H = (
-                pd.util.hash_array(np.asarray(all_grams, dtype=object))
-                if all_grams
-                else np.array([], dtype=np.uint64)
-            )
-            sigs = []
-            for i in range(len(offsets) - 1):
-                h = H[offsets[i] : offsets[i + 1]]
-                if len(h):
-                    m = (h[:, None] * A[None, :] + B[None, :]).min(axis=0)  # wrap-mod-2^64
-                else:
-                    m = empty_sig
-                sigs.append(m.view(np.int64).tolist())
-            yield pd.DataFrame({"_id": pdf[id_col], "_sig": sigs})
-
-    return spread_small_scan(df.select(id_col, text_col)).mapInPandas(run, schema=out_schema)
-
-
 def minhash_banded_np(
     df: DataFrame,
     text_col: str = "text",
@@ -642,10 +557,6 @@ def simhash64(text: Column) -> Column:
         bit = F.shiftleft(F.lit(1).cast("long"), j)
         out = out.bitwiseOR(F.when(F.element_at(votes, j + 1) > 0, bit).otherwise(F.lit(0).cast("long")))
     return out
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_signatures(

@@ -114,26 +114,6 @@ def brute_force_topk(
 # ---------------------------------------------------------------------------
 
 
-def ivf_centroids(corpus: DataFrame, n_centroids: int, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Deterministic centroid sample by hash stride — a map-side filter
-    with NO global sort/window (a row_number() over the whole corpus would
-    funnel 100 TB through one partition). (A k-means refinement would
-    iterate assign→mean; the hash sample is the standard warm start and is
-    fully deterministic for testing.)"""
-    total = corpus.count()
-    stride = max(total // n_centroids, 1)
-    sampled = (
-        corpus.select(id_col, vec_col)
-        .where(F.pmod(F.xxhash64(id_col), F.lit(stride)) == 0)
-        .orderBy(id_col)  # tiny result (≈n_centroids rows) — sort is cheap
-        .limit(n_centroids)
-    )
-    w = Window.orderBy(id_col)  # over ≈n_centroids rows only
-    return sampled.withColumn("centroid_id", F.row_number().over(w) - 1).select(
-        "centroid_id", F.col(vec_col).alias("centroid")
-    )
-
-
 def _local_spherical_kmeans(X: "np.ndarray", k: int, seed: int = 42, iters: int = 8) -> "np.ndarray":
     """kmeans++ init (D² sampling on cosine distance) + spherical Lloyd on a
     driver-side sample matrix. Returns a row-normalized (k × dim) matrix.

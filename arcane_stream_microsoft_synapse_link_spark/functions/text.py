@@ -391,21 +391,6 @@ def compression_stats(
     )
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the full stat set in one projection pass."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        char_count(t).alias("n_chars_computed"),
-        punct_count(t).alias("n_punct"),
-        stopword_count(t).alias("n_stopwords"),
-        F.round(quality_score(t), 6).alias("quality"),
-        fingerprint_md5(t).alias("fp_md5"),
-        lang_id(t).alias("lang_pred"),
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     text_col: str = "text",

@@ -29,28 +29,32 @@ def latest_by_version(
     version_col: str = "versionnumber",
     fallback_version_col: str | None = "sysrowversion",
 ) -> DataFrame:
-    has_version = version_col in df.columns
-    has_fallback = bool(fallback_version_col) and fallback_version_col in df.columns
-    if not (has_version or has_fallback):
-        # no version column at all: keep the batch as-is so the merge's
-        # documented last-write-wins fallback (merge.py) decides
+    versions = tuple(c for c in (version_col, fallback_version_col) if c and c in df.columns)
+    if not versions:
+        # no version column at all: keep the batch as-is (the merge keeps
+        # one row per key of it, see merge.py)
         return df
-    rank, first = _latest_row(
-        key, version_col if has_version else None, fallback_version_col if has_fallback else None
-    )
+    rank, first = _latest_row(key, versions)
     return df.withColumn("__rn", rank).where(first).drop("__rn")
 
 
+def row_version(versions: tuple[str, ...]) -> Column:
+    """A row's version: the first non-null of the ``versions`` columns."""
+    return F.coalesce(*map(F.col, versions)) if len(versions) > 1 else F.col(versions[0])
+
+
+def version_order(versions: tuple[str, ...], *ties: Column) -> list[Column]:
+    """Newest first: the row version descending with nulls last, then
+    ``ties``, then the fallback column descending — the one B8 order,
+    shared by :func:`latest_by_version` and the merge's window
+    (``merge.py``)."""
+    return [F.desc_nulls_last(row_version(versions)), *ties, *map(F.desc_nulls_last, versions[1:])]
+
+
 @schema_memo
-def _latest_row(key: str, version_col: str | None, fallback: str | None) -> tuple[Column, Column]:
+def _latest_row(key: str, versions: tuple[str, ...]) -> tuple[Column, Column]:
     """The per-key rank by version (newest first) and its "is the newest"
     filter, memoized per (key, version columns present) like the merge's
     Columns (see ``exprmemo``)."""
-    order = []
-    if version_col and fallback:
-        order.append(F.desc_nulls_last(F.coalesce(F.col(version_col), F.col(fallback))))
-        order.append(F.desc_nulls_last(fallback))
-    else:
-        order.append(F.desc_nulls_last(version_col or fallback))
-    w = Window.partitionBy(key).orderBy(*order)
+    w = Window.partitionBy(key).orderBy(*version_order(versions))
     return F.row_number().over(w), F.col("__rn") == 1

@@ -1,4 +1,4 @@
-"""CDC upsert MERGE + schema evolution (operators B9/B10).
+"""CDC upsert MERGE + schema evolution (operators B8/B9/B10).
 
 Semantics proven by the reference integration test
 (StreamRunner.scala:176-233, Fixtures.scala:35-73): every streamed batch
@@ -18,20 +18,30 @@ Stale re-uploads become no-ops ("merged without actual updates"). Shape:
     WHEN MATCHED AND staged.version > target.version THEN UPDATE *
     WHEN NOT MATCHED AND NOT staged.IsDelete THEN INSERT *
 
-Expressed Spark-first as equi-joins on the merge key:
+Expressed Spark-first as ONE window over the target and the change batch:
 
-    effective  = staged ⟕ target(key, version) WHERE new-or-newer
-    survivors  = target ANTI-JOIN effective-keys
-    result     = survivors UNION (effective WHERE NOT IsDelete)
+    rows    = target (__src = 0) UNION ALL staged (__src = 1)
+    winner  = row_number() = 1 OVER (PARTITION BY key
+                ORDER BY version DESC NULLS LAST, __src tie, sysrowversion DESC NULLS LAST)
+    result  = winner WHERE NOT (staged AND IsDelete)
 
-— the same logical plan a Delta/Iceberg copy-on-write ``MERGE INTO`` with
-those clauses lowers to. The staged side of a change batch is small
-(≤ rowsPerGroup), so AQE executes both joins as broadcasts: no full-table
-shuffle, and with merge-key bucketing on the target the join is co-located.
+Per key the newest row wins, whichever side it came from: that is the
+in-batch dedup (B8), the version guard and the survivor pick (B9) at
+once. The ``__src`` tie decides equal versions for the target row, so a
+stale re-upload is a no-op, and a null version for the staged row (a
+target row without a version is replaced, as a missing target row is).
+The plan reads the target once and has one shuffle: the union is
+repartitioned by the merge key, or on a bucketed target by ``__bucket``
+(the window then partitions by bucket and key), so every touched bucket
+is written by one task as one file. No join, no broadcast.
 
-Idempotency: re-merging the same batch finds equal versions (guard fails)
-→ no-op. Combined with commit-then-watermark ordering this is the
-exactly-once contract (SURVEY.md §7 item 4).
+Idempotency: re-merging the same batch finds equal versions (the target
+row wins) → no-op. Combined with commit-then-watermark ordering this is
+the exactly-once contract (SURVEY.md §7 item 4).
+
+Without version columns the window still keeps one row per key: a staged
+row replaces the target row, and which of a batch's rows for one key wins
+is undefined.
 
 Schema evolution (B10, docs/backfill.md:14-19): staging-only columns are
 added to the target (nulls backfilled); target-only columns get nulls for
@@ -42,11 +52,14 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..exprmemo import columns, schema_memo
-from .dedup import latest_by_version
+
+# ``latest_by_version`` stays reachable here (``cdcbench/spans.py`` traces
+# it under this module); the merge dedups inside its own window
+from .dedup import latest_by_version, row_version, version_order  # noqa: F401
 
 
 def _evolve(target: DataFrame, staged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -74,55 +87,69 @@ def _evolve(target: DataFrame, staged: DataFrame) -> tuple[DataFrame, DataFrame]
 
 
 class _MergeColumns(NamedTuple):
-    key: Column
-    not_delete: Column
-    # the version guard over staged ⟕ target(key, version): the target
-    # side's select list, the join condition and "new or newer"; None
-    # without a target or without version columns
-    target_versions: tuple[Column, ...] | None
-    join_on: Column | None
-    newer: Column | None
-    # the observation's aggregates over the deduplicated staged rows
+    tag_target: Column  # __src = 0
+    tag_staged: Column  # __src = 1
+    # row_number over the key window and, when observed, the per-key
+    # "holds a target row" / "holds a staged row" flags
+    ranked: tuple[Column, ...]
+    winner: Column
+    keep: Column  # drops the staged deletes that won
+    # the observation's aggregates over the winner rows
     effect: tuple[Column, ...]
+    helpers: tuple[str, ...]  # the columns the merge adds, dropped at the end
 
 
 @schema_memo
 def _merge_columns(
-    key: str, version_cols: tuple[str, ...], is_delete_col: str | None, has_target: bool
+    key: str,
+    versions: tuple[str, ...],
+    is_delete_col: str | None,
+    bucketed: bool,
+    observed: bool,
 ) -> _MergeColumns:
     """Every Column ``cdc_merge`` builds, for one merge shape: the key,
     the version columns present (coalesced in this order), the delete
-    flag column if present, and whether there is a target.  Memoized
-    (keyed by that shape, bounded, pickled empty — see ``exprmemo``), so a
-    stream whose schema holds still builds them once."""
+    flag column if present, whether the window partitions by ``__bucket``
+    too and whether an observation rides on it.  Memoized (keyed by that
+    shape, bounded, pickled empty — see ``exprmemo``), so a stream whose
+    schema holds still builds them once."""
     is_delete = (
         F.coalesce(F.col(is_delete_col), F.lit(False)) if is_delete_col else F.lit(False)
     )
-    guard = join_on = newer = None
-    if not has_target:
-        hit, takes_effect = F.lit(False), F.lit(True)
-    elif version_cols:
-        ver = F.col(version_cols[0]) if len(version_cols) == 1 else F.coalesce(
-            *[F.col(c) for c in version_cols]
-        )
-        guard = (F.col(key).alias("__k"), ver.alias("__tgt_v"), F.lit(True).alias("__hit"))
-        join_on = F.col(key) == F.col("__k")
-        newer = F.col("__tgt_v").isNull() | (ver > F.col("__tgt_v"))
-        hit, takes_effect = F.col("__hit").isNotNull(), newer
+    src = F.col("__src")
+    if versions:
+        # equal versions: the target row first; a null version: the staged row
+        tie = F.when(row_version(versions).isNull(), 1 - src).otherwise(src)
+        order = version_order(versions, tie)
     else:
-        # no version columns → last-write-wins
-        hit, takes_effect = F.lit(True), F.lit(True)
-    # a null version compares null: the guard filter drops the row, so it
-    # counts as a no-op
-    took = F.coalesce(takes_effect, F.lit(False))
-    upsert = took & ~is_delete
-    effect = (
-        F.count(F.when(upsert & ~hit, 1)).alias("inserts"),
-        F.count(F.when(upsert & hit, 1)).alias("updates"),
-        F.count(F.when(took & is_delete & hit, 1)).alias("deletes"),
-        F.count(F.when(~took | (is_delete & ~hit), 1)).alias("noops"),
+        order = [src.desc()]
+    w = Window.partitionBy(*(("__bucket", key) if bucketed else (key,))).orderBy(*order)
+    ranked = [F.row_number().over(w).alias("__rn")]
+    took = src == 1  # the staged row won
+    effect: tuple[Column, ...] = ()
+    if observed:
+        key_rows = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ranked += [
+            (F.min(src).over(key_rows) == 0).alias("__in_target"),
+            (F.max(src).over(key_rows) == 1).alias("__in_staged"),
+        ]
+        hit, touched = F.col("__in_target"), F.col("__in_staged")
+        effect = (
+            F.count(F.when(took & ~is_delete & ~hit, 1)).alias("inserts"),
+            F.count(F.when(took & ~is_delete & hit, 1)).alias("updates"),
+            F.count(F.when(took & is_delete & hit, 1)).alias("deletes"),
+            # stale re-uploads (the target row won) and deletes of absent keys
+            F.count(F.when(touched & ~(took & (~is_delete | hit)), 1)).alias("noops"),
+        )
+    return _MergeColumns(
+        F.lit(0).alias("__src"),
+        F.lit(1).alias("__src"),
+        tuple(ranked),
+        F.col("__rn") == 1,
+        ~(took & is_delete),
+        effect,
+        ("__src", "__rn", "__in_target", "__in_staged") if observed else ("__src", "__rn"),
     )
-    return _MergeColumns(F.col(key), ~is_delete, guard, join_on, newer, effect)
 
 
 def cdc_merge(
@@ -131,11 +158,13 @@ def cdc_merge(
     key: str = "arcane_merge_key",
     version_col: str = "versionnumber",
     is_delete_col: str = "IsDelete",
-    dedup_staged: bool = True,
     allow_schema_evolution: bool = True,
     observation: Observation | None = None,
+    bucket: Column | None = None,
 ) -> DataFrame:
     """Merge a staged change batch into the target; returns the new target.
+
+    ``staged`` may hold several rows per key: the newest takes part.
 
     ``allow_schema_evolution=False`` is the reference's
     ``staging.table.isUnifiedSchema: true`` (crd-microsoft-synapse.yaml:82-85):
@@ -143,22 +172,26 @@ def cdc_merge(
     mismatch is an error instead of an auto-ADD/null-fill.
 
     ``observation``: filled, when the returned plan first runs, with what
-    the deduplicated staged rows did after the version guard: the
-    ``inserts``, ``updates`` and ``deletes`` (of a key the target held)
-    that took effect, and the ``noops`` that did not — stale re-uploads
-    and deletes of absent keys.  The four add up to the deduplicated
-    rows.  It rides on that plan (``DataFrame.observe``), so it starts no
-    Spark job.  Without version columns every staged row takes effect
-    (last write wins) and counts as an update when the target is not
-    empty.
+    the staged keys did: the ``inserts``, ``updates`` and ``deletes`` (of
+    a key the target held) that took effect, and the ``noops`` that did
+    not — stale re-uploads and deletes of absent keys.  The four add up
+    to the distinct staged keys.  It rides on that plan
+    (``DataFrame.observe`` over the window's winner rows), so it starts
+    no Spark job.
 
-    The guard, the delete flag and the observation's aggregates are built
-    once per merge shape (:func:`_merge_columns`: keyed by the key, the
-    version and delete columns present and whether a target exists;
-    bounded; pickled empty)."""
-    if dedup_staged:
-        staged = latest_by_version(staged, key=key, version_col=version_col)
+    ``bucket``: a bucketed target's bucket expression
+    (``VersionedTable.bucket_expr``).  A side without a ``__bucket``
+    column gets one, and the one shuffle clusters by bucket, so each
+    bucket the batch touches is written as one file.
 
+    The window, the delete flag and the observation's aggregates are
+    built once per merge shape (:func:`_merge_columns`; bounded; pickled
+    empty)."""
+    if bucket is not None:
+        if "__bucket" not in staged.columns:
+            staged = staged.withColumn("__bucket", bucket)
+        if target is not None and "__bucket" not in target.columns:
+            target = target.withColumn("__bucket", bucket)
     if target is not None:
         if not allow_schema_evolution:
             t_names = {f.name for f in target.schema.fields if not f.name.startswith("__")}
@@ -170,32 +203,23 @@ def cdc_merge(
                     f"target-only: {sorted(t_names - s_names)})"
                 )
         target, staged = _evolve(target, staged)
-    # after _evolve both sides hold the same columns
-    names = (target if target is not None else staged).columns
+    # after _evolve both sides hold the same columns, in the same order
+    names = staged.columns
     c = _merge_columns(
         key,
         tuple(v for v in (version_col, "sysrowversion") if v in names),
         is_delete_col if is_delete_col in names else None,
-        target is not None,
+        bucket is not None,
+        observation is not None,
     )
-
-    def observed(df: DataFrame) -> DataFrame:
-        # observed BEFORE the guard filter, on the branch that feeds the
-        # union: AQE drops plan branches it proves empty (the broadcast
-        # of touched keys, say), and an observation that lived only there
-        # would come back empty
-        return df if observation is None else df.observe(observation, *c.effect)
-
-    if target is None:
-        return observed(staged).where(c.not_delete)
-
-    if c.target_versions is not None:
-        joined = staged.join(target.select(*c.target_versions), c.join_on, "left")
-        effective = observed(joined).where(c.newer).drop("__k", "__tgt_v", "__hit")
-    else:
-        effective = observed(staged)
-
-    upserts = effective.where(c.not_delete)
-    touched_keys = effective.select(c.key)
-    survivors = target.join(touched_keys, on=key, how="left_anti")
-    return survivors.unionByName(upserts)
+    rows = staged.select("*", c.tag_staged)
+    if target is not None:
+        rows = target.select("*", c.tag_target).union(rows)
+    winners = (
+        rows.repartition("__bucket" if bucket is not None else key)
+        .select("*", *c.ranked)
+        .where(c.winner)
+    )
+    if observation is not None:
+        winners = winners.observe(observation, *c.effect)
+    return winners.where(c.keep).drop(*c.helpers)

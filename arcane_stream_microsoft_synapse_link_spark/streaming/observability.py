@@ -12,7 +12,8 @@ source emits one row per batch folder, so there ``numInputRows`` counts
 folders; the per-batch JSONL counts rows.
 
 No driver-side aggregation of data rows happens here — metrics are O(1)
-per batch regardless of batch size.
+per batch regardless of batch size, and the recorder's memory is O(1)
+over the life of a stream: running totals plus the last ``TAIL`` batches.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import deque
 from dataclasses import asdict, dataclass, field
 
 
@@ -105,10 +107,16 @@ METRIC_ROWS_MERGED = "arcane.stream.rows.merged"
 METRIC_BATCH_DURATION = "arcane.stream.batch.duration"
 
 
+# batches a recorder keeps in memory; the JSONL file holds them all
+TAIL = 256
+
+
 class MetricsRecorder:
     """Collects per-batch intake metrics; optionally appends JSONL to
     ``path`` (one object per line, crash-safe append) and/or publishes
-    StatsD datagrams per batch (``statsd_address``)."""
+    StatsD datagrams per batch (``statsd_address``).  In memory it keeps
+    the running ``batches`` and ``total_rows`` and the last ``TAIL``
+    batches (``metrics``)."""
 
     def __init__(
         self,
@@ -118,7 +126,9 @@ class MetricsRecorder:
     ):
         self.path = path
         self.tags = dict(tags or {})
-        self.metrics: list[BatchMetric] = []
+        self.metrics: deque[BatchMetric] = deque(maxlen=TAIL)
+        self.batches = 0
+        self.total_rows = 0
         self.statsd = StatsdPublisher(statsd_address, self.tags) if statsd_address else None
 
     def record(
@@ -150,6 +160,8 @@ class MetricsRecorder:
             noops=noops,
         )
         self.metrics.append(m)
+        self.batches += 1
+        self.total_rows += rows
         if self.path:
             os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
             with open(self.path, "a") as fh:
@@ -161,10 +173,6 @@ class MetricsRecorder:
                 self.statsd.count(METRIC_ROWS_MERGED, m.merged)
             self.statsd.timing_ms(METRIC_BATCH_DURATION, seconds * 1000.0)
         return m
-
-    @property
-    def total_rows(self) -> int:
-        return sum(m.rows for m in self.metrics)
 
 
 def jsonl_progress_listener(path: str, streams):

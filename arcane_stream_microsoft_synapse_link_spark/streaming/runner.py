@@ -4,7 +4,8 @@ The Spark rewrite of the reference's ZIO pipeline (SURVEY.md §3.1-3.2):
 
     poll changelog (A1) → pending folders (A2/B5) → read+type CSV (A3)
     → normalize (B2) → field selection (B1) → merge key (B4)
-    → dedup latest (B8) → CDC merge (B9) + schema evolution (B10)
+    → CDC merge: dedup latest (B8) + version guard (B9) in one window,
+      schema evolution (B10)
     → commit snapshot → watermark (B11) → maintenance cadence (C1-C4)
 
 Each batch folder is processed atomically: the snapshot commit lands
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections import deque
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -129,10 +131,20 @@ class StreamSpec:
     storage_connection: dict | None = None
 
 
+# folder names a runner remembers: a stream runs for months, so its
+# memory holds counters and this many most recent names, not a history
+FOLDER_TAIL = 256
+
+
 @dataclass
 class RunnerStats:
     batches_merged: int = 0
-    folders_seen: list[str] = field(default_factory=list)
+    folders_consumed: int = 0
+    folders_seen: deque[str] = field(default_factory=lambda: deque(maxlen=FOLDER_TAIL))
+
+    def consumed(self, folders: list[BatchFolder]) -> None:
+        self.folders_consumed += len(folders)
+        self.folders_seen.extend(f.name for f in folders)
 
 
 @schema_memo
@@ -304,7 +316,7 @@ class StreamRunner:
             if not pinned:
                 # the change folder is parsed once per tick, in this pin's
                 # own job, which also observes the rows read and the
-                # buckets they touch; both merge branches read the pin
+                # buckets they touch; the merge reads the pin
                 staged = self._prepare(df)
                 if bucketed:
                     staged = staged.withColumn("__bucket", self.table.bucket_expr())
@@ -333,6 +345,7 @@ class StreamRunner:
                 is_delete_col=self.spec.is_delete_column,
                 allow_schema_evolution=not self.spec.is_unified_schema,
                 observation=observed[0] if observed else None,
+                bucket=self.table.bucket_expr() if bucketed else None,
             )
             if touched is None:
                 self.table.commit(merged)
@@ -389,7 +402,7 @@ class StreamRunner:
                         version_col=self.spec.version_column,
                         is_delete_col=self.spec.is_delete_column,
                         allow_schema_evolution=not self.spec.is_unified_schema,
-                        dedup_staged=False,
+                        bucket=self.table.bucket_expr() if self.table.bucket_count else None,
                     )
                 )
 
@@ -498,7 +511,7 @@ class StreamRunner:
 
         self._deferred = False
         self.merge_folders(pending)
-        self.stats.folders_seen.extend(f.name for f in pending)
+        self.stats.consumed(pending)
         return len(pending)
 
     def merge_folders(self, folders: list[BatchFolder]) -> None:
@@ -566,7 +579,7 @@ class StreamRunner:
                     _release(df)  # drop the buffer's pinned blocks
                 else:
                     self.table.set_watermark(grp[-1].name)
-                self.stats.folders_seen.extend(f.name for f in grp)
+                self.stats.consumed(grp)
                 consumed += len(grp)
                 if self._stop:  # B22: finish the in-flight group, then yield
                     if prefetch is not None:

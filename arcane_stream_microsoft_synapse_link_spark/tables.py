@@ -27,12 +27,17 @@ format or a newer format version is refused with
 :class:`SnapshotFormatError`.
 
 On a production cluster this module is swapped for Iceberg/Delta
-(``MERGE INTO`` with the identical plan shape); every caller goes through
-this narrow interface so the swap is local. Copy-on-write of the full
-snapshot is what Iceberg's ``copy-on-write MERGE`` does per touched file;
-with merge-key bucketing (reference partition spec
-``bucket(arcane_merge_key, N)``, docs/crd.md:211) only touched buckets
-would rewrite — mirrored here by partitioning snapshots on a key bucket.
+(``MERGE INTO`` with the same clauses, ``lakehouse.py``); every caller
+goes through this narrow interface so the swap is local. A CDC tick is
+copy-on-write, as Iceberg's ``copy-on-write MERGE`` is per touched file:
+``operators/merge.py`` reads the target once, unions it with the change
+batch and keeps the newest row per key in one window behind one shuffle,
+and ``commit`` writes the result. With merge-key bucketing (reference
+partition spec ``bucket(arcane_merge_key, N)``, docs/crd.md:211)
+snapshots are partitioned on a key bucket: the tick reads only the
+buckets its batch touches, the shuffle clusters by bucket so each of
+them is written by one task as one file, and ``commit`` hard-links the
+untouched bucket directories forward.
 """
 
 from __future__ import annotations

@@ -95,21 +95,33 @@ def test_delete_then_stale_reupload_nets_to_delete(spark, scenario):
     assert len(state) == 4
 
 
-def test_backfill_merge_behavior(spark, scenario):
-    """Backfill with Merge finalization folds into the live target (B16)."""
-    fx, spec = scenario
-    fx.upload_batch(minus(hours=2), update_changelog=True)
-    runner = StreamRunner(spark, spec)
-    runner.backfill()
-    assert runner.table.read(spark).count() == 5
+def test_backfill_merge_behavior(spark, tmp_path):
+    """Backfill with Merge finalization folds into the live target (B16);
+    on a bucketed target every merged row lands in its key's bucket."""
+    for buckets in (0, 4):
+        fx = SynapseFixture(tmp_path / f"source{buckets}")
+        spec = StreamSpec(
+            entity_name=ENTITY,
+            source_root=str(tmp_path / f"source{buckets}"),
+            target_root=str(tmp_path / f"target{buckets}"),
+            bucket_count=buckets,
+        )
+        fx.upload_batch(minus(hours=2), update_changelog=True)
+        runner = StreamRunner(spark, spec)
+        runner.backfill()
+        assert runner.table.read(spark).count() == 5
 
-    fx.upload_batch(minus(minutes=30), add_upsert=True, update_changelog=True)
-    spec2 = StreamSpec(**{**spec.__dict__, "backfill_behavior": "Merge", "backfill_start": None})
-    runner2 = StreamRunner(spark, spec2)
-    assert runner2.backfill() == 7  # 5 + 2 inserts, update folded in
+        fx.upload_batch(minus(minutes=30), add_upsert=True, update_changelog=True)
+        spec2 = StreamSpec(**{**spec.__dict__, "backfill_behavior": "Merge", "backfill_start": None})
+        runner2 = StreamRunner(spark, spec2)
+        assert runner2.backfill() == 7  # 5 + 2 inserts, update folded in
 
-    state = _ids_and_versions(runner2.table.read(spark))
-    assert state[KEYS[1]] == BASE_VERSION + 100
+        df = runner2.table.read(spark)
+        state = _ids_and_versions(df)
+        assert state[KEYS[1]] == BASE_VERSION + 100
+        if buckets:
+            placed = df.where(df["__bucket"].eqNullSafe(runner2.table.bucket_expr()))
+            assert placed.count() == 7
 
 
 def test_sharded_backfill_resumes_after_crash(spark, scenario, monkeypatch):

@@ -59,7 +59,7 @@ def test_second_build_returns_the_memoized_columns(spark):
 
     feed = tables._change_feed_columns("arcane_merge_key", "v", schema(), schema())
     assert tables._change_feed_columns("arcane_merge_key", "v", schema(), schema()) is feed
-    shape = ("arcane_merge_key", ("versionnumber",), "IsDelete", True)
+    shape = ("arcane_merge_key", ("versionnumber",), "IsDelete", True, True)
     assert merge._merge_columns(*shape) is merge._merge_columns(*shape)
     assert tables.VersionedTable("t", bucket_count=8).bucket_expr() is (
         tables.VersionedTable("u", bucket_count=8).bucket_expr()

@@ -12,6 +12,8 @@ from arcane_stream_microsoft_synapse_link_spark.config import (
     spec_from_json,
 )
 from arcane_stream_microsoft_synapse_link_spark.operators.retry import RetryPolicy, with_retry
+from arcane_stream_microsoft_synapse_link_spark.sources.synapse import BatchFolder
+from arcane_stream_microsoft_synapse_link_spark.streaming import observability, runner
 from arcane_stream_microsoft_synapse_link_spark.streaming.observability import MetricsRecorder
 from arcane_stream_microsoft_synapse_link_spark.streaming.runner import StreamRunner, StreamSpec
 
@@ -146,6 +148,23 @@ def test_metrics_recorder(tmp_path):
     lines = [json.loads(x) for x in open(path)]
     assert lines[0]["rows_per_sec"] == 1000.0
     assert lines[1]["tags"] == {"entity": "currency"}
+
+
+def test_recorder_and_runner_memory_stay_bounded():
+    """A stream runs for months: 10,000 batches leave the recorder and the
+    runner's stats holding counters plus a fixed-size tail."""
+    rec = MetricsRecorder()
+    stats = runner.RunnerStats()
+    for i in range(10_000):
+        name = f"2024-01-01T00.00.{i:05d}Z"
+        rec.record(name, rows=3, seconds=0.01, inserts=1, updates=1, deletes=0, noops=1)
+        stats.consumed([BatchFolder(name, f"/src/{name}")])
+    assert len(rec.metrics) == observability.TAIL
+    assert (rec.batches, rec.total_rows) == (10_000, 30_000)
+    assert rec.metrics[-1].batch_folder == name
+    assert len(stats.folders_seen) == runner.FOLDER_TAIL
+    assert stats.folders_consumed == 10_000
+    assert stats.folders_seen[-1] == name
 
 
 def test_parse_duration():

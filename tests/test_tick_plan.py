@@ -1,7 +1,9 @@
 """Plan shape of one change-capture tick: the change CSV is parsed once
-(by either driver), metrics ride on the commit's own plan (no Spark job of
-their own) and report the rows that took effect, and a bucketed table
-survives a column type change."""
+(by either driver), a tick is three Spark jobs (pin, the merge's one
+shuffle, the write) whose commit plan reads the target once and joins
+nothing, metrics ride on the commit's own plan (no Spark job of their
+own) and report the rows that took effect, and a bucketed table survives
+a column type change."""
 
 from __future__ import annotations
 
@@ -86,6 +88,48 @@ def test_run_once_scans_change_csv_once(spark, tmp_path):
         ]
         assert len(scans) == 1, (driver, name, scans)
         assert runner.table.watermark() == folder
+
+
+def _final_plan_nodes(plan):
+    """Operator names of an adaptive plan's final physical plan."""
+    final = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    return [m.group(1).strip() for m in re.finditer(r"[+:]- (?:\* )?([A-Za-z ]+?)[ ]?\(\d+\)", final)]
+
+
+def test_tick_is_three_jobs_with_one_shuffle_and_one_target_scan(spark, tmp_path):
+    """Flat and bucketed, metrics on and off: a ``run_once`` tick starts
+    the pin's job, the merge's shuffle-map job and the write job, and the
+    commit plan has one Exchange, no join and one parquet scan (the
+    target's)."""
+    fx = SynapseFixture(tmp_path / "source")
+    fx.upload_batch(minus(hours=1), update_changelog=True)
+    runners = {
+        (buckets, on): StreamRunner(
+            spark,
+            _spec(
+                tmp_path,
+                f"t{buckets}-{on}",
+                bucket_count=buckets,
+                metrics_path=str(tmp_path / f"m{buckets}.jsonl") if on else None,
+            ),
+        )
+        for buckets in (0, 8)
+        for on in (False, True)
+    }
+    for r in runners.values():
+        r.backfill()
+    fx.upload_batch(minus(minutes=5), add_delete=True, add_upsert=True, update_changelog=True)
+    for case, r in runners.items():
+        before = _last_sql_id(spark)
+        got, jobs = count_jobs(spark, r.run_once)
+        assert (got, jobs) == (1, 3), case
+        (commit,) = [p for p in _sql_plans_after(spark, before) if "InsertIntoHadoopFsRelation" in p]
+        nodes = _final_plan_nodes(commit)
+        assert nodes.count("Exchange") == 1, (case, nodes)
+        assert not [n for n in nodes if "Join" in n], (case, nodes)
+        assert nodes.count("Scan parquet") == 1, (case, nodes)
+    states = [_state(spark, r) for r in runners.values()]
+    assert all(st == states[0] for st in states)
 
 
 def _state(spark, runner):
