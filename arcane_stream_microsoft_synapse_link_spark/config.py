@@ -7,7 +7,10 @@ and ``STREAMCONTEXT__BACKFILL_ID`` toggles (StreamRunner.scala:178-179,
 202-203). This module accepts that exact document shape and maps the
 engine-meaningful knobs onto :class:`StreamSpec`; Kubernetes/Trino/Iceberg-
 catalog blocks that have no Spark equivalent are ignored (the SparkSession
-and its catalog replace them).
+and its catalog replace them).  ``source.bufferingSettings`` (B20
+read-ahead) is accepted and ignored too: a tick parses its whole admitted
+range in one job before its first group merges, so nothing is left to
+read ahead.
 """
 
 from __future__ import annotations
@@ -114,28 +117,6 @@ def _memory_bound_kwargs(shaper_impl: dict) -> dict:
     }
 
 
-def _buffering_kwargs(buffering: dict | None) -> dict:
-    """bufferingSettings: {"unbounded": {}} | {"buffered": {"maxBufferSize": N}}
-    → B20 StreamSpec kwargs ("unbounded" buffers with no row cap)."""
-    if not buffering:
-        return {}
-    kind = _tagged_union(buffering, "none")
-    if kind == "buffered":
-        size = int((buffering.get("buffered") or {}).get("maxBufferSize", 0) or 0)
-        if size <= 0:
-            # "buffered" is the reference's BOUNDED mode; max_buffer_rows=0
-            # means unbounded in the runner, so falling through would
-            # silently invert the user's choice
-            raise ValueError(
-                "bufferingSettings.buffered requires a positive maxBufferSize "
-                "(use {'unbounded': {}} for an uncapped read-ahead buffer)"
-            )
-        return {"source_buffering": "buffered", "max_buffer_rows": size}
-    if kind == "unbounded":
-        return {"source_buffering": "buffered", "max_buffer_rows": 0}
-    return {}
-
-
 def spec_from_dict(doc: dict, *, target_root: str | None = None) -> StreamSpec:
     src = doc.get("source", {})
     cfg = src.get("configuration", {})
@@ -204,12 +185,6 @@ def spec_from_dict(doc: dict, *, target_root: str | None = None) -> StreamSpec:
         advised_burst=int(throughput.get("advisedBurst", 0) or 0),
         # B19 memoryBound shaper variant (crd-microsoft-synapse.yaml:361-393)
         **_memory_bound_kwargs(throughput.get("shaperImpl") or {}),
-        # B20 source buffering (crd-microsoft-synapse.yaml:447-475):
-        # {"unbounded": {}} or {"buffered": {"maxBufferSize": N}}
-        **_buffering_kwargs(
-            (doc.get("source", {}) or {}).get("bufferingSettings")
-            or doc.get("bufferingSettings")
-        ),
         retry=retry,
         target_sorted_by=tuple(props.get("sortedBy", ()) or ()),
         target_bloom_filter_columns=tuple(props.get("parquetBloomFilterColumns", ()) or ()),

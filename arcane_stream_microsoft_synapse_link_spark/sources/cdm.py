@@ -71,9 +71,6 @@ class CdmEntity:
         """All-string schema for the headerless CSV read (cast afterwards)."""
         return T.StructType([T.StructField(a.name, T.StringType(), True) for a in self.attributes])
 
-    def typed_schema(self) -> T.StructType:
-        return T.StructType([T.StructField(a.name, a.spark_type(), True) for a in self.attributes])
-
 
 def parse_model(model_json: str) -> dict[str, CdmEntity]:
     """model.json → {entity_name: CdmEntity}. Driver-side, tiny."""

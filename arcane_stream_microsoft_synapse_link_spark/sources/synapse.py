@@ -212,44 +212,6 @@ class SynapseLinkSource:
             if f.endswith(".csv")
         ]
 
-    def read_batch(
-        self, spark: SparkSession, folder: BatchFolder, line_splittable: bool | None = None
-    ) -> DataFrame | None:
-        """All CSV chunks of one batch folder as one typed DataFrame
-        (``line_splittable``: see ``read_entity_csv``)."""
-        csvs = self._data_paths(self.batch_csvs(folder))
-        if not csvs:
-            return None
-        return read_entity_csv(
-            spark, csvs, self.entity_schema(folder), line_splittable=line_splittable
-        )
-
-    def folder_row_counts(
-        self, spark: SparkSession, folders: list[BatchFolder]
-    ) -> dict[str, int]:
-        """Rows per batch folder in ONE distributed pass (row-granular
-        grouping B6 / rate shaping B18 need counts before admission).
-        Folders are tagged and union-counted so the planner runs a single
-        count job over all pending CSVs, not one job per folder."""
-        from pyspark.sql import functions as F
-
-        all_csvs = self._data_paths([p for f in folders for p in self.batch_csvs(f)])
-        splittable = bool(all_csvs) and paths_are_line_splittable(spark, all_csvs)
-        tagged = [
-            d.select(F.lit(f.name).alias("__folder"))
-            for f in folders
-            if (d := self.read_batch(spark, f, line_splittable=splittable)) is not None
-        ]
-        counts = {f.name: 0 for f in folders}
-        if not tagged:
-            return counts
-        union = tagged[0]
-        for d in tagged[1:]:
-            union = union.unionByName(d)
-        for row in union.groupBy("__folder").count().collect():
-            counts[row["__folder"]] = row["count"]
-        return counts
-
     def read_folders(self, spark: SparkSession, folders: list[BatchFolder]) -> DataFrame | None:
         """Union of several batch folders (backfill scan B13).
 

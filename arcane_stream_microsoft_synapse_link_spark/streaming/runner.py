@@ -111,13 +111,6 @@ class StreamSpec:
     # A9 targetTableProperties: in-file sort order + parquet bloom filters
     target_sorted_by: tuple[str, ...] = ()
     target_bloom_filter_columns: tuple[str, ...] = ()
-    # B20 source buffering (crd-microsoft-synapse.yaml:447-475): "buffered"
-    # overlaps source read+parse of the NEXT admission group with the merge
-    # of the current one (double-buffering via localCheckpoint on a second
-    # scheduler thread — FAIR mode shares the executors), bounded by
-    # max_buffer_rows (<=0 → unbounded, the reference's "unbounded" mode)
-    source_buffering: str = "none"  # none | buffered
-    max_buffer_rows: int = 0
     # staging.table.isUnifiedSchema: true → disable B10 schema migration;
     # stage/target column-set mismatch becomes an error instead of auto-ADD
     is_unified_schema: bool = False
@@ -154,9 +147,9 @@ def _has_merge_key() -> Column:
 
 @schema_memo
 def _pin_metrics(bucketed: bool) -> tuple[Column, ...]:
-    """What the tick's pin observes: the staged rows as read and, on a
-    bucketed table, the set of buckets they touch (at most
-    ``bucket_count`` values)."""
+    """What the tick's pin observes (per batch folder on the grouped
+    tick): the staged rows as read and, on a bucketed table, the set of
+    buckets they touch (at most ``bucket_count`` values)."""
     rows = F.count(F.lit(1)).alias("rows")
     return (rows, F.collect_set("__bucket").alias("buckets")) if bucketed else (rows,)
 
@@ -298,32 +291,54 @@ class StreamRunner:
             return df
         return df.where(~F.coalesce(F.col(self.spec.is_delete_column), F.lit(False)))
 
+    def _stage(self, df: DataFrame, tag_folder: bool = False) -> DataFrame:
+        """The change rows as the merge takes them: prepared (B2→B1→B4),
+        with their ``__bucket`` on a bucketed table and, with
+        ``tag_folder``, their batch folder as ``__folder``: the path
+        component above the entity directory, which spooled ``localize``
+        paths keep."""
+        staged = self._prepare(df)
+        if tag_folder:
+            staged = staged.withColumn(
+                "__folder", F.element_at(F.split(F.input_file_name(), "/"), -3)
+            )
+        if self.table.bucket_count:
+            staged = staged.withColumn("__bucket", self.table.bucket_expr())
+        return staged
+
     def _merge_folder_batch(
-        self, df: DataFrame, up_to_folder: str, is_backfill: bool = False
+        self,
+        df: DataFrame,
+        up_to_folder: str,
+        seen: tuple[int, list[int]] | None = None,
     ) -> None:
+        """Merge one change range and commit, then advance the watermark to
+        ``up_to_folder``.  ``df`` is the raw read, staged and pinned inside
+        the retried unit; with ``seen`` = (rows, touched buckets) it is
+        already staged and pinned (a group of the grouped tick) and merges
+        as it is."""
         from ..session import release_checkpoint
 
         t0 = time.time()
         metrics_on = bool(self.spec.metrics_path or self.spec.statsd_address)
         bucketed = bool(self.table.bucket_count)
         pinned: list[DataFrame] = []
-        pin_observed: list[Observation] = []
+        counted = [seen] if seen else []
         observed: list[Observation] = []
 
         def merge_and_commit() -> None:
             # the retried unit is parse+merge+commit — safe to replay because
             # the version-guarded merge is idempotent (re-merge is a no-op)
-            if not pinned:
+            if not counted:
                 # the change folder is parsed once per tick, in this pin's
                 # own job, which also observes the rows read and the
                 # buckets they touch; the merge reads the pin
-                staged = self._prepare(df)
-                if bucketed:
-                    staged = staged.withColumn("__bucket", self.table.bucket_expr())
-                pin_observed[:] = [Observation()]
-                staged = staged.observe(pin_observed[0], *_pin_metrics(bucketed))
+                pin_observed = Observation()
+                staged = self._stage(df).observe(pin_observed, *_pin_metrics(bucketed))
                 pinned.append(staged.localCheckpoint())
-            staged = pinned[0]
+                got = pin_observed.get
+                counted.append((got["rows"], got.get("buckets", [])))
+            staged = pinned[0] if pinned else df
             # metrics ride on the commit's own plan; an Observation fills
             # once, so each attempt gets a fresh one
             observed[:] = [Observation()] if metrics_on else []
@@ -336,7 +351,7 @@ class StreamRunner:
                 # touches (partition-pruned target read); untouched buckets
                 # are hard-linked forward by commit — at 100 TB the merge
                 # cost follows the change set, not the table
-                touched = sorted(pin_observed[0].get["buckets"])
+                touched = sorted(counted[0][1])
                 target = target.where(F.col("__bucket").isin(touched))
             merged = cdc_merge(
                 target,
@@ -353,14 +368,14 @@ class StreamRunner:
                 self.table.commit(merged, touched_buckets=touched)
 
         try:
-            with_retry(merge_and_commit, self.spec.retry, is_backfill=is_backfill)
+            with_retry(merge_and_commit, self.spec.retry)
             self.table.set_watermark(up_to_folder)  # commit THEN watermark
             self.stats.batches_merged += 1
             if metrics_on:
                 effect = observed[0].get
                 self.metrics.record(
                     up_to_folder,
-                    pin_observed[0].get["rows"],
+                    counted[0][0],
                     time.time() - t0,
                     inserts=effect["inserts"],
                     updates=effect["updates"],
@@ -488,8 +503,11 @@ class StreamRunner:
         re-upload of the same key inside one capture window must still net
         to a delete (StreamRunner.scala:206-233 — dedup across the group
         picks the delete row via its higher sysrowversion). Per-folder
-        schemas survive because folders are read individually and unioned
-        by name (watch-list item 3). Returns folders consumed."""
+        schemas survive because runs of same-schema folders are read
+        separately and unioned by name (watch-list item 3).  With
+        ``rows_per_group`` or a shaper set the same one read is cut into
+        admission groups (``_run_once_grouped``).  Returns folders
+        consumed."""
         state = self.desired_state()
         if state == self.STATE_SUSPENDED:
             return 0  # paused: no scan, no merge, watermark untouched
@@ -518,7 +536,7 @@ class StreamRunner:
         """Read a folder range and merge it as ONE deduplicated group, then
         advance the watermark to its last folder; a range holding no data
         for this entity only advances the watermark.  The read-and-merge
-        step of every driver: ``run_once``, the grouped path and each
+        step of the ungrouped ``run_once`` tick and of each
         ``run_structured`` micro-batch."""
         df = self.source.read_folders(self.spark, folders)
         if df is not None:
@@ -527,68 +545,59 @@ class StreamRunner:
             self.table.set_watermark(folders[-1].name)
 
     def _run_once_grouped(self, pending: list[BatchFolder]) -> int:
-        """Row-granular admission (B6 + B18): one count pass over the
-        pending range, chunk folders into ≤ rowsPerGroup groups, admit each
-        group through the token bucket. Each admitted group merges and
-        advances the watermark independently (same exactly-once unit as the
-        plain path — the version-guarded merge keeps cross-group delete/
+        """Row-granular admission (B6 + B18) over ONE read of the pending
+        range.  The range is staged with each row's batch folder and pinned
+        once; one job over the pin returns every folder's keyed rows and
+        touched buckets.  Folders are chunked into ≤ rowsPerGroup groups
+        and each group is admitted through the shaper, then merged from the
+        pin and watermarked on its own (the same exactly-once unit as the
+        plain path: the version-guarded merge keeps cross-group delete/
         stale-re-upload hazards out exactly as the reference's chunked
-        emission does). Unadmitted folders stay pending for the next tick."""
+        emission does).  A group without rows only advances the watermark.
+        Unadmitted folders stay pending for the next tick, and a stop
+        request (B22) yields after the in-flight group."""
+        from ..session import release_checkpoint
         from .throughput import chunk_by_rows
 
-        counts = self.source.folder_row_counts(self.spark, pending)
-        groups = chunk_by_rows(
-            pending, [counts[f.name] for f in pending], self.spec.rows_per_group
-        )
-        buffering = self.spec.source_buffering == "buffered"
-        executor = None
-        prefetch = None  # Future[DataFrame | None] for groups[i+1]
-        if buffering and len(groups) > 1:
-            from concurrent.futures import ThreadPoolExecutor
+        bucketed = bool(self.table.bucket_count)
+        df = self.source.read_folders(self.spark, pending)
+        pinned: list[DataFrame] = []
 
-            executor = ThreadPoolExecutor(max_workers=1, thread_name_prefix="src-buffer")
-
-        def _read_materialized(g):
-            # parse + localCheckpoint on the buffer thread: the merge of the
-            # current group and the read of the next share executors (FAIR)
-            d = self.source.read_folders(self.spark, g)
-            return d.localCheckpoint() if d is not None else None
-
-        # DataFrame.unpersist() does NOT drop localCheckpoint blocks —
-        # they are pinned at the RDD layer inside the LogicalRDD plan
-        from ..session import release_checkpoint as _release
+        def pin_and_count() -> dict[str, tuple[int, list[int]]]:
+            # a lazy pin: the count job's map stage parses the range and
+            # fills the pin, so the tick's parse costs no job of its own
+            for pin in pinned:
+                release_checkpoint(pin)
+            pinned[:] = [self._stage(df, tag_folder=True).localCheckpoint(eager=False)]
+            stats = pinned[0].groupBy("__folder").agg(*_pin_metrics(bucketed)).collect()
+            return {r["__folder"]: (r["rows"], r["buckets"] if bucketed else []) for r in stats}
 
         consumed = 0
         try:
-            for i, grp in enumerate(groups):
-                rows = sum(counts[f.name] for f in grp)
-                if self.shaper is not None and not self.shaper.take_up_to_capacity(rows):
-                    if prefetch is not None:  # bounded waste: drop the read-ahead
-                        _release(prefetch.result())
+            by_folder = with_retry(pin_and_count, self.spec.retry) if df is not None else {}
+            # a row whose path does not name a pending folder would be in no group
+            stray = set(by_folder) - {f.name for f in pending}
+            if stray:
+                raise RuntimeError(f"change rows outside the pending folders: {sorted(stray)}")
+            rows = [by_folder.get(f.name, (0, []))[0] for f in pending]
+            for grp in chunk_by_rows(pending, rows, self.spec.rows_per_group):
+                names = [f.name for f in grp if f.name in by_folder]
+                n = sum(by_folder[x][0] for x in names)
+                if self.shaper is not None and not self.shaper.take_up_to_capacity(n):
                     break  # over the advised rate — defer the rest of the backlog
-                ahead, prefetch = prefetch, None
-                if executor is not None and i + 1 < len(groups) and not self._stop:
-                    nxt = groups[i + 1]
-                    nxt_rows = sum(counts[f.name] for f in nxt)
-                    if self.spec.max_buffer_rows <= 0 or nxt_rows <= self.spec.max_buffer_rows:
-                        prefetch = executor.submit(_read_materialized, nxt)
-                if ahead is None:
-                    self.merge_folders(grp)
-                elif (df := ahead.result()) is not None:
-                    self._merge_folder_batch(df, grp[-1].name)
-                    _release(df)  # drop the buffer's pinned blocks
+                if n:
+                    group = pinned[0].where(F.col("__folder").isin(names)).drop("__folder")
+                    touched = sorted({b for x in names for b in by_folder[x][1]})
+                    self._merge_folder_batch(group, grp[-1].name, seen=(n, touched))
                 else:
                     self.table.set_watermark(grp[-1].name)
                 self.stats.consumed(grp)
                 consumed += len(grp)
                 if self._stop:  # B22: finish the in-flight group, then yield
-                    if prefetch is not None:
-                        _release(prefetch.result())
-                        prefetch = None
                     break
         finally:
-            if executor is not None:
-                executor.shutdown(wait=True)
+            for pin in pinned:
+                release_checkpoint(pin)
         self._deferred = consumed < len(pending)
         return consumed
 

@@ -127,98 +127,6 @@ def sessionize_stream(
     )
 
 
-def sessionize_stream_tws(
-    events: DataFrame,
-    gap_s: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """``sessionize_stream`` re-expressed on Spark 4's transformWithState
-    API (``transformWithStateInPandas`` + ``StatefulProcessor``): named
-    ValueState replaces the single GroupState blob and first-class timers
-    replace ``setTimeoutTimestamp``. Semantics are identical to
-    ``sessionize_stream`` (same sessions, same append-mode emission;
-    equivalence is a test invariant). Requires the RocksDB state store
-    provider (a transformWithState constraint, and the provider you would
-    run at scale anyway — changelog-checkpointed, spills to disk) and the
-    ``protobuf`` package (the operator's Python state-server wire protocol;
-    the equivalence test import-skips where it is absent).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_s * _US
-    out_schema = StructType(
-        [
-            StructField(user_col, LongType()),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-
-    def _row(user: int, start_us: int, last_us: int, n: int, tot: float) -> dict[str, Any]:
-        return {
-            user_col: user,
-            "session_start": pd.Timestamp(start_us, unit="us"),
-            "session_end": pd.Timestamp(last_us, unit="us"),
-            "n_events": n,
-            "total_value": tot,
-        }
-
-    class _Sessionizer(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.open = handle.getValueState(
-                "open", "start_us long, last_us long, n long, tot double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N803 (API names)
-            user = key[0]
-            closed: list[dict[str, Any]] = []
-            cur = tuple(self.open.get()) if self.open.exists() else None
-            parts = [p for p in rows if len(p)]
-            if parts:
-                batch = pd.concat(parts).sort_values(ts_col)
-                ts_us = (batch[ts_col].astype("int64") // 1000).tolist()
-                vals = batch[value_col].astype("float64").tolist()
-                for t_us, v in zip(ts_us, vals):
-                    if cur is None:
-                        cur = (t_us, t_us, 1, v)
-                    elif t_us - cur[1] > gap_us:
-                        closed.append(_row(user, *cur))
-                        cur = (t_us, t_us, 1, v)
-                    else:
-                        cur = (cur[0], max(t_us, cur[1]), cur[2] + 1, cur[3] + v)
-            if cur is not None:
-                self.open.update(cur)
-                for expiry_ms in self.handle.listTimers():
-                    self.handle.deleteTimer(expiry_ms)
-                self.handle.registerTimer(
-                    max((cur[1] + gap_us) // 1000, timerValues.getCurrentWatermarkInMs() + 1)
-                )
-            if closed:
-                yield pd.DataFrame(closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):  # noqa: N803
-            if self.open.exists():
-                yield pd.DataFrame([_row(key[0], *tuple(self.open.get()))])
-                self.open.clear()
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark(ts_col, f"{gap_s} seconds")
-        .groupBy(user_col)
-        .transformWithStateInPandas(_Sessionizer(), out_schema, "append", "eventTime")
-    )
-
-
 def sessionize_sql(
     events: DataFrame,
     gap_s: int = 1800,
@@ -252,100 +160,4 @@ def sessionize_sql(
             F.sum(value_col).alias("total_value"),
         )
         .drop("_sid")
-    )
-
-
-def _session_chunks(
-    chunks: Iterator[pd.DataFrame],
-    gap_us: int,
-    user_col: str,
-    ts_col: str,
-    value_col: str,
-) -> Iterator[pd.DataFrame]:
-    """Core of the mapInPandas sessionizer: rows arrive sorted by
-    (user, ts) within the partition; each Arrow chunk is sessionized
-    vectorized (shift-compare → cumsum → cython groupby), with a single
-    open-session accumulator carried across chunk boundaries — O(chunk)
-    memory regardless of partition size."""
-    carry: tuple | None = None  # (user, start_us, last_us, n, tot)
-
-    def flush(c: tuple) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                user_col: pd.array([c[0]], dtype="int64"),
-                "session_start": pd.to_datetime([c[1]], unit="us"),
-                "session_end": pd.to_datetime([c[2]], unit="us"),
-                "n_events": pd.array([c[3]], dtype="int64"),
-                "total_value": pd.array([c[4]], dtype="float64"),
-            }
-        )
-
-    for pdf in chunks:
-        if not len(pdf):
-            continue
-        users = pdf[user_col].to_numpy()
-        us = (pdf[ts_col].astype("int64") // 1000).to_numpy()
-        vals = pdf[value_col].astype("float64").to_numpy()
-        new_user = pdf[user_col].ne(pdf[user_col].shift()).to_numpy()
-        gap_brk = (us - pdf[ts_col].astype("int64").shift().floordiv(1000).to_numpy()) > gap_us
-        sid = (new_user | gap_brk).cumsum()
-        g = pd.DataFrame({"u": users, "t": us, "v": vals}).groupby(sid, sort=True)
-        agg = g.agg(u=("u", "first"), s=("t", "min"), e=("t", "max"), n=("t", "size"), tot=("v", "sum"))
-        rows = list(agg.itertuples(index=False))
-        first = rows[0]
-        if carry is not None:
-            if first.u == carry[0] and first.s - carry[2] <= gap_us:
-                rows[0] = type(first)(
-                    first.u, carry[1], max(first.e, carry[2]), first.n + carry[3], first.tot + carry[4]
-                )
-            else:
-                yield flush(carry)
-        *closed, last = rows
-        carry = (int(last.u), int(last.s), int(last.e), int(last.n), float(last.tot))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    user_col: pd.array([r.u for r in closed], dtype="int64"),
-                    "session_start": pd.to_datetime([r.s for r in closed], unit="us"),
-                    "session_end": pd.to_datetime([r.e for r in closed], unit="us"),
-                    "n_events": pd.array([r.n for r in closed], dtype="int64"),
-                    "total_value": pd.array([r.tot for r in closed], dtype="float64"),
-                }
-            )
-    if carry is not None:
-        yield flush(carry)
-
-
-def sessionize_batch(
-    events: DataFrame,
-    gap_s: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Custom-operator form of gap-sessionization: repartition by key,
-    sort within partitions, then ONE mapInPandas pass that sessionizes
-    whole partitions vectorized (not per-key calls — per-key applyInPandas
-    pays Arrow + pandas fixed cost per user, ~10ms × n_users). Semantics
-    identical to ``sessionize_sql``; use this shape when session logic
-    outgrows SQL (custom merges, nested payload accumulation)."""
-    out_schema = StructType(
-        [
-            StructField(user_col, LongType()),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-    gap_us = gap_s * _US
-
-    def run(chunks: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _session_chunks(chunks, gap_us, user_col, ts_col, value_col)
-
-    return (
-        events.select(user_col, ts_col, value_col)
-        .repartition(user_col)
-        .sortWithinPartitions(user_col, ts_col)
-        .mapInPandas(run, out_schema)
     )

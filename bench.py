@@ -19,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from arcane_stream_microsoft_synapse_link_spark.profile import (  # noqa: E402
+from arcane_stream_microsoft_synapse_link_spark.jobspan import (  # noqa: E402
     gc_hint as _gc_hint,
     release_cached_blocks as _release_cached_blocks,
     steal_seconds as _steal_seconds,

@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from arcane_stream_microsoft_synapse_link_spark.profile import job_span  # noqa: E402
+from arcane_stream_microsoft_synapse_link_spark.jobspan import job_span  # noqa: E402
 from arcane_stream_microsoft_synapse_link_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"

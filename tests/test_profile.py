@@ -1,5 +1,6 @@
-"""The profile module's report, its refusal of unknown entries, and the
-repository's remaining scripts staying importable."""
+"""The profile module's report, its refusal of unknown entries, the
+plan-free job span, and the repository's remaining scripts staying
+importable."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import sys
 
 import pytest
 
-from arcane_stream_microsoft_synapse_link_spark import profile
+from arcane_stream_microsoft_synapse_link_spark import jobspan, profile
 
 from .conftest import SF_SMOKE, count_jobs
 
@@ -47,13 +48,25 @@ def test_job_span_nests(spark):
     it is the outer span's."""
 
     def outer():
-        _, inner = profile.job_span(spark, lambda: spark.range(10).count())
+        _, inner = jobspan.job_span(spark, lambda: spark.range(10).count())
         spark.range(5).count()
         return inner
 
-    inner, outer_span = profile.job_span(spark, outer)
+    inner, outer_span = jobspan.job_span(spark, outer)
     assert inner.jobs >= 1 and inner.tasks >= 1
     assert outer_span.jobs >= 1
+
+
+def test_jobspan_loads_no_query_surface():
+    """The span helpers import without the declared query registry."""
+    code = (
+        "import sys, arcane_stream_microsoft_synapse_link_spark.jobspan; "
+        "print(sorted(m for m in sys.modules if '.plans' in m))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]"
 
 
 def test_remaining_scripts_import_and_profile_cli_answers_help():

@@ -1,6 +1,6 @@
 """Property-based sessionization: random event sets through the built-in
-window/agg form AND the mapInPandas custom operator must both match a
-trivially-correct Python oracle (walk sorted events, split on gap)."""
+window/agg form must match a trivially-correct Python oracle (walk sorted
+events, split on gap)."""
 
 from __future__ import annotations
 
@@ -11,10 +11,7 @@ from datetime import datetime, timedelta
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from arcane_stream_microsoft_synapse_link_spark.streaming.stateful import (
-    sessionize_batch,
-    sessionize_sql,
-)
+from arcane_stream_microsoft_synapse_link_spark.streaming.stateful import sessionize_sql
 
 T0 = datetime(2024, 1, 1)
 GAP_S = 60
@@ -71,4 +68,3 @@ def test_sessionize_matches_oracle(spark, events):
     )
     expected = oracle(events)
     assert canon(sessionize_sql(df, gap_s=GAP_S)) == expected
-    assert canon(sessionize_batch(df, gap_s=GAP_S)) == expected

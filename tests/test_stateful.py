@@ -17,6 +17,16 @@ from arcane_stream_microsoft_synapse_link_spark.streaming.stateful import sessio
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 GAP_S = 60
+# (user, seconds after T0, value) per micro-batch
+BATCHES = (
+    # user 1 two events 10s apart → one open session in state
+    [(1, 0, 1.0), (1, 10, 2.0)],
+    # user 1 far-future event (closes [0,10] by gap), user 2 appears
+    [(1, 1000, 5.0), (2, 1100, 7.0)],
+    # watermark jumps to 5000-60 → user1 [1000] and user2 [1100] sessions
+    # time out and flush; user 3 stays open (never emitted)
+    [(3, 5000, 9.0)],
+)
 
 
 def _write_batch(spark, path: str, rows, mtime: float) -> None:
@@ -36,13 +46,8 @@ def sessions(spark, tmp_path_factory):
     src = root / "src"
     src.mkdir()
     now = time.time()
-    # batch 1: user 1 two events 10s apart → one open session in state
-    _write_batch(spark, str(src / "b0"), [(1, 0, 1.0), (1, 10, 2.0)], now - 30)
-    # batch 2: user 1 far-future event (closes [0,10] by gap), user 2 appears
-    _write_batch(spark, str(src / "b1"), [(1, 1000, 5.0), (2, 1100, 7.0)], now - 20)
-    # batch 3: watermark jumps to 5000-60 → user1 [1000] and user2 [1100]
-    # sessions time out and flush; user 3 stays open (never emitted)
-    _write_batch(spark, str(src / "b2"), [(3, 5000, 9.0)], now - 10)
+    for i, batch in enumerate(BATCHES):
+        _write_batch(spark, str(src / f"b{i}"), batch, now - 30 + 10 * i)
 
     stream = (
         spark.readStream.schema("user_id long, ts timestamp, value double")
@@ -82,105 +87,19 @@ def test_open_session_not_emitted(sessions):
     assert len(sessions) == 3
 
 
-def test_batch_sessionize_matches_sql(spark):
-    """mapInPandas custom operator ≡ built-in window/agg version."""
-    from arcane_stream_microsoft_synapse_link_spark.catalog import Tables
-    from arcane_stream_microsoft_synapse_link_spark.streaming.stateful import (
-        sessionize_batch,
-        sessionize_sql,
-    )
+def test_streamed_sessions_match_sql_form(spark, sessions):
+    """The streaming form emits what the batch form (``sessionize_sql``,
+    the declared ``ops_sessionize``) computes over the same rows, minus
+    user 3's session, which is still open when the stream ends."""
+    from arcane_stream_microsoft_synapse_link_spark.streaming.stateful import sessionize_sql
 
-    ev = Tables(spark, "/root/testdata/sf0.001").events
-
-    def canon(df):
-        return sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events, round(r.total_value, 6))
-            for r in df.collect()
-        )
-
-    assert canon(sessionize_batch(ev, gap_s=14400)) == canon(sessionize_sql(ev, gap_s=14400))
-
-
-def test_session_chunks_boundary_carry():
-    """Splitting the same sorted input at any chunk boundary must not
-    change the sessions (open-session carry across Arrow chunks)."""
-    import pandas as pd
-
-    from arcane_stream_microsoft_synapse_link_spark.streaming.stateful import _session_chunks
-
-    rows = []
-    for u in (1, 2):
-        for s in (0, 10, 20, 5000, 5030, 90000):
-            rows.append((u, pd.Timestamp(2024, 1, 1) + pd.Timedelta(seconds=s + u), 1.0))
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-
-    def run(chunks):
-        out = list(_session_chunks(iter(chunks), 60 * 1_000_000, "user_id", "ts", "value"))
-        return sorted(
-            tuple(t) for c in out for t in c.itertuples(index=False)
-        )
-
-    whole = run([pdf])
-    assert len(whole) == 6  # 3 sessions per user
-    for cut1 in range(1, len(pdf)):
-        for cut2 in (cut1, (cut1 + 5) % len(pdf)):
-            lo, hi = min(cut1, cut2), max(cut1, cut2)
-            parts = [p for p in (pdf[:lo], pdf[lo:hi], pdf[hi:]) if len(p)]
-            assert run(parts) == whole, f"split at {lo},{hi}"
-
-
-def test_transform_with_state_twin_matches(spark, tmp_path):
-    """The transformWithStateInPandas sessionizer must emit exactly the
-    sessions the applyInPandasWithState form does on the same batched
-    stream (gap closure + timer eviction + open-session suppression)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's Python state-server protocol requires protobuf",
-    )
-    from arcane_stream_microsoft_synapse_link_spark.streaming.stateful import (
-        sessionize_stream_tws,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    now = time.time()
-    _write_batch(spark, str(src / "b0"), [(1, 0, 1.0), (1, 10, 2.0)], now - 30)
-    _write_batch(spark, str(src / "b1"), [(1, 1000, 5.0), (2, 1100, 7.0)], now - 20)
-    _write_batch(spark, str(src / "b2"), [(3, 5000, 9.0)], now - 10)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "*"))
-        )
-        out = sessionize_stream_tws(stream, gap_s=GAP_S)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    got = {
+    rows = [
+        (u, T0 + timedelta(seconds=s), v) for batch in BATCHES for (u, s, v) in batch
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
+    closed = {
         (r.user_id, r.session_start, r.session_end): (r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM tws_out").collect()
+        for r in sessionize_sql(df, gap_s=GAP_S).collect()
+        if r.user_id != 3
     }
-    assert got == {
-        (1, T0, T0 + timedelta(seconds=10)): (2, 3.0),
-        (1, T0 + timedelta(seconds=1000), T0 + timedelta(seconds=1000)): (1, 5.0),
-        (2, T0 + timedelta(seconds=1100), T0 + timedelta(seconds=1100)): (1, 7.0),
-    }
+    assert closed == sessions

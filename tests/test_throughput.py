@@ -157,6 +157,10 @@ def test_graceful_stop_finishes_inflight_group(tmp_path, spark):
     merged = []
 
     def merge_then_stop(df, up_to, **kw):
+        # each group is its slice of the tick's one pin, tag dropped, with
+        # its rows counted by the tick's per-folder job
+        assert "__folder" not in df.columns
+        assert kw["seen"][0] == 40
         orig(df, up_to, **kw)  # in-flight group completes fully
         merged.append(up_to)
         r.request_stop()  # SIGTERM lands mid-tick
@@ -313,49 +317,91 @@ def test_memory_bound_shaper_in_runner(spark, tmp_path):
     assert runner.run_once() == 2  # memory back → backlog drains
 
 
-@pytest.mark.slow
-def test_source_buffering_matches_unbuffered(spark, tmp_path):
-    """B20 buffered read-ahead: same final table/watermark as the plain
-    path, with the next group's parse overlapped on a buffer thread."""
-    from tests.synapse_fixture import SynapseFixture, minus
+def test_grouped_ticks_match_ungrouped_and_leave_no_pins(spark, tmp_path):
+    """The grouped tick cuts its admission groups from one pin of the
+    pending range: on a bucketed table, a full grouped tick, a
+    shaper-deferred one and one stopped after its first group (B22) each
+    end, once drained, with the rows and watermark of one ungrouped tick
+    over the same source, and none leaves a persistent RDD behind."""
+    from tests.synapse_fixture import minus
 
-    from arcane_stream_microsoft_synapse_link_spark.streaming.runner import (
-        StreamRunner,
-        StreamSpec,
-    )
+    fx = SynapseFixture(tmp_path / "src")
+    # 5, 8, 6 and 8 rows: rows_per_group=14 cuts [f0, f1] and [f2, f3]
+    fx.upload_batch(minus(hours=3))
+    fx.upload_batch(minus(minutes=40), add_upsert=True)
+    fx.upload_batch(minus(minutes=30), add_delete=True)
+    frontier = fx.upload_batch(minus(minutes=20), add_upsert=True, update_changelog=True)
 
-    def build(root_suffix, **extra):
-        fx = SynapseFixture(tmp_path / f"src_{root_suffix}")
-        fx.upload_batch(minus(hours=3), update_changelog=True)
+    def runner(name, **kw):
         spec = StreamSpec(
-            entity_name="dimensionattributelevelvalue",
-            source_root=str(tmp_path / f"src_{root_suffix}"),
-            target_root=str(tmp_path / f"tgt_{root_suffix}"),
-            rows_per_group=4,
-            **extra,
+            entity_name=ENTITY,
+            source_root=fx.root,
+            target_root=str(tmp_path / name),
+            bucket_count=4,
+            **kw,
         )
-        runner = StreamRunner(spark, spec)
-        runner.backfill()
-        fx.upload_batch(minus(minutes=40), add_upsert=True)
-        fx.upload_batch(minus(minutes=30), add_delete=True)
-        fx.upload_batch(minus(minutes=20), add_upsert=True, update_changelog=True)
-        return runner
+        return StreamRunner(spark, spec)
 
-    plain = build("plain")
-    buf = build("buf", source_buffering="buffered", max_buffer_rows=100_000)
-    assert plain.run_once() == 3
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    assert buf.run_once() == 3
+    def pins():
+        # the session is shared across tests: compare against the set
+        # before the grouped ticks
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
     def state(r):
-        return sorted(
-            (row["Id"], row["versionnumber"])
-            for row in r.table.read(spark).select("Id", "versionnumber").collect()
-        )
+        rows = r.table.read(spark).select("Id", "versionnumber", "displayvalue").collect()
+        return sorted(map(tuple, rows)), r.table.watermark()
 
-    assert state(plain) == state(buf)
-    assert plain.table.watermark().split("/")[-1] == buf.table.watermark().split("/")[-1]
-    # the buffered tick leaves no NEW pinned blocks behind (the session is
-    # shared across tests, so compare against the pre-tick set)
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    assert after - before == set()
+    plain = runner("plain")
+    assert plain.run_once() == 4
+    expected = state(plain)
+    assert expected[1] == frontier
+
+    before = pins()
+    full = runner("full", rows_per_group=14)
+    assert full.run_once() == 4
+    assert not pins() - before
+    assert full.table.current_version() == 2  # one commit per group
+    assert state(full) == expected
+
+    deferred = runner("deferred", rows_per_group=14, advised_rate="1 per 1 hour", advised_burst=13)
+    assert deferred.run_once() == 2  # the 13-row group fits the burst, the 14-row one not
+    assert deferred._deferred is True
+    assert not pins() - before
+    deferred.shaper.tokens = 14.0
+    assert deferred.run_once() == 2
+    assert state(deferred) == expected
+
+    stopped = runner("stopped", rows_per_group=14)
+    merge = stopped._merge_folder_batch
+
+    def merge_then_stop(df, up_to, **kw):
+        merge(df, up_to, **kw)
+        stopped.request_stop()
+
+    stopped._merge_folder_batch = merge_then_stop
+    assert stopped.run_once() == 2
+    assert not pins() - before
+    stopped._stop = False
+    assert stopped.run_once() == 2
+    assert not pins() - before
+    assert state(stopped) == expected
+
+
+def test_grouped_tick_refuses_rows_outside_pending_folders(spark, tmp_path, monkeypatch):
+    """A row whose path names no pending batch folder would fall in no
+    admission group and be skipped without a trace; the grouped tick
+    raises instead and leaves the watermark where it was."""
+    from pyspark.sql import functions as F
+
+    fx = _make_source(tmp_path, n_folders=2, rows_each=3)
+    spec = StreamSpec(
+        entity_name=ENTITY,
+        source_root=fx.root,
+        target_root=os.path.join(str(tmp_path), "target"),
+        rows_per_group=5,
+    )
+    r = StreamRunner(spark, spec)
+    monkeypatch.setattr(F, "input_file_name", lambda: F.lit("/x/elsewhere/entity/chunk.csv"))
+    with pytest.raises(RuntimeError, match="elsewhere"):
+        r.run_once()
+    assert r.table.watermark() is None

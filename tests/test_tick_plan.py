@@ -1,9 +1,9 @@
 """Plan shape of one change-capture tick: the change CSV is parsed once
-(by either driver), a tick is three Spark jobs (pin, the merge's one
-shuffle, the write) whose commit plan reads the target once and joins
-nothing, metrics ride on the commit's own plan (no Spark job of their
-own) and report the rows that took effect, and a bucketed table survives
-a column type change."""
+(by either driver, and by a grouped or shaped tick), a tick is three
+Spark jobs (pin, the merge's one shuffle, the write) whose commit plan
+reads the target once and joins nothing, metrics ride on the commit's
+own plan (no Spark job of their own) and report the rows that took
+effect, and a bucketed table survives a column type change."""
 
 from __future__ import annotations
 
@@ -54,9 +54,23 @@ def _last_sql_id(spark):
     return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1)
 
 
+def _csv_scans(spark, before):
+    """Change-CSV scan nodes in the SQL executions after ``before``."""
+    return [
+        ln
+        for plan in _sql_plans_after(spark, before)
+        for ln in plan.splitlines()
+        if re.match(r"\(\d+\) Scan (text|csv) ", ln)
+    ]
+
+
 def test_run_once_scans_change_csv_once(spark, tmp_path):
     """Both drivers: a ``run_once`` tick and a ``run_structured``
-    micro-batch each scan the change folder's CSV once."""
+    micro-batch each scan the change folder's CSV once, and so does a
+    grouped (``rows_per_group``) or shaped (``advised_rate``) tick, which
+    cuts its admission groups from the one pin: a G-group tick is the
+    pin's parse and per-folder count (2 jobs, the count's shuffle map
+    stage filling the pin) plus each group's merge and write."""
     fx = SynapseFixture(tmp_path / "source")
     fx.upload_batch(minus(hours=1), update_changelog=True)
     cases = [
@@ -80,14 +94,27 @@ def test_run_once_scans_change_csv_once(spark, tmp_path):
             assert runner.run_once() == 1
         else:
             run_structured(spark, spec, ckpt).awaitTermination(120)
-        scans = [
-            ln
-            for plan in _sql_plans_after(spark, before)
-            for ln in plan.splitlines()
-            if re.match(r"\(\d+\) Scan (text|csv) ", ln)
-        ]
+        scans = _csv_scans(spark, before)
         assert len(scans) == 1, (driver, name, scans)
         assert runner.table.watermark() == folder
+
+    # 9-row folders (base, delete, upsert): rows_per_group=9 → one group each
+    shaped = {"advised_rate": "100000 per 1 second"}
+    for k, (name, kw, groups) in enumerate(
+        (("grouped", {"rows_per_group": 9}, 3), ("shaped", shaped, 1))
+    ):
+        runner = StreamRunner(spark, _spec(tmp_path, name, bucket_count=8, **kw))
+        runner.backfill()
+        for j in range(groups):
+            ts = minus(minutes=20 - 5 * k - j)
+            folder = fx.upload_batch(ts, add_delete=True, add_upsert=True, update_changelog=True)
+        before = _last_sql_id(spark)
+        got, jobs = count_jobs(spark, runner.run_once)
+        assert (got, jobs) == (groups, 2 + 2 * groups), name
+        scans = _csv_scans(spark, before)
+        assert len(scans) == 1, (name, scans)
+        assert runner.table.watermark() == folder
+        assert runner.table.current_version() == 1 + groups
 
 
 def _final_plan_nodes(plan):
